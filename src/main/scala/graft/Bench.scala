@@ -11,12 +11,22 @@ import org.apache.spark.sql.SparkSession
   * the JSON line.
   */
 object Bench {
+  /** `SPARK_GRAFT_CPUS`, the local core count of Bench, Verify and the
+    * profiling tools: a positive integer, 4 when unset. Anything else
+    * (`*`, `four`, `0`) fails fast instead of reaching `local[...]`,
+    * the shuffle partition count and the persisted JSON. */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(4) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -135,6 +145,7 @@ object Bench {
       val json =
         s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir"}"""
       java.nio.file.Files.write(perQueryPath, json.getBytes("UTF-8"))
+      System.err.println(s"[bench] per-query timings written to ${perQueryPath.toAbsolutePath}")
     } catch { case e: Throwable => System.err.println(s"[bench] per-query dump failed: $e") }
     spark.stop()
   }

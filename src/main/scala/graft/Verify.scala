@@ -16,10 +16,10 @@ object Verify {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -4,8 +4,11 @@ import graft.codec.{BlockCodec, CanonicalJson}
 import graft.model._
 import graft.state.StateMerge
 import graft.transform.{BlockTransforms, DeltaTransforms}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Batch apply of a micro-batch of blocks (SURVEY.md §3.1's Spark
   * equivalent): ordering guard against metastate, idempotent append of
@@ -47,41 +50,79 @@ object BlockIngest {
     fresh
   }
 
+  /** One state table's merge: its delta rows per block, the bucketing key
+    * of a delta row, and the merge semantics (presence-gated keytype
+    * column, hard delete). */
+  private final case class MergeDef(
+      table: String, keys: Seq[String], payload: Seq[String],
+      deltas: (SparkSession, RDD[Block]) => DataFrame,
+      keyValues: Block => Seq[Any],
+      ktCol: Option[(String, String)] = None, hard: Boolean = false)
+
+  private def mergeDef[T <: Product : TypeTag : ClassTag](
+      table: String, keys: Seq[String], payload: Seq[String],
+      rows: Block => Seq[T], key: T => Any,
+      ktCol: Option[(String, String)] = None, hard: Boolean = false): MergeDef =
+    MergeDef(table, keys, payload,
+      (spark, blocks) => spark.createDataset(blocks.flatMap(rows))(Encoders.product[T]).toDF(),
+      b => rows(b).map(key), ktCol, hard)
+
+  private val mergeDefs: Seq[MergeDef] = Seq(
+    mergeDef("account", Seq("addr"),
+      Seq("microalgos", "rewardsbase", "rewards_total", "account_data"),
+      DeltaTransforms.accountDeltaRows, (r: AccountDeltaRow) => r.addr,
+      ktCol = Some(("ktPresent", "keytype"))),
+    mergeDef("asset", Seq("id"), Seq("creator_addr", "params"),
+      DeltaTransforms.assetDeltaRows, (r: AssetDeltaRow) => r.id),
+    mergeDef("account_asset", Seq("addr", "assetid"), Seq("amount", "frozen"),
+      DeltaTransforms.accountAssetDeltaRows, (r: AccountAssetDeltaRow) => r.addr),
+    mergeDef("app", Seq("id"), Seq("creator", "params"),
+      DeltaTransforms.appDeltaRows, (r: AppDeltaRow) => r.id),
+    mergeDef("account_app", Seq("addr", "app"), Seq("localstate"),
+      DeltaTransforms.accountAppDeltaRows, (r: AccountAppDeltaRow) => r.addr),
+    mergeDef("app_box", Seq("app", "name"), Seq("value"),
+      DeltaTransforms.appBoxDeltaRows, (r: AppBoxDeltaRow) => r.app, hard = true))
+
   def applyBlocks(store: TableStore, blocksJson: Dataset[String]): Unit = {
     val spark = store.spark
     import spark.implicits._
-    val timing = sys.env.contains("GRAFT_INGEST_TIMING")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[ingest-timing] $phase: ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
 
     // Parse each block's JSON exactly ONCE, into deserialized JVM objects
     // pinned in executor memory (spill-serialized under pressure). Every
-    // downstream job — 3 appends, the touched-bucket union, 6 merges —
-    // flatMaps over these objects instead of re-parsing the JSON, so the
-    // parse cost is paid once per block regardless of how many tables the
-    // batch fans out to. This is the one deliberate RDD in the engine:
-    // Dataset caching would re-deserialize (or re-parse) per use; an RDD
-    // MEMORY(_AND_DISK) cache holds the live objects.
-    val all: org.apache.spark.rdd.RDD[Block] = blocksJson.rdd
+    // downstream job — 3 appends, 6 merges — flatMaps over these objects
+    // instead of re-parsing the JSON, so the parse cost is paid once per
+    // block regardless of how many tables the batch fans out to. This is
+    // the one deliberate RDD in the engine: Dataset caching would
+    // re-deserialize (or re-parse) per use; an RDD MEMORY(_AND_DISK) cache
+    // holds the live objects.
+    val all: RDD[Block] = blocksJson.rdd
       .map(BlockCodec.blockFromJson)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val next = store.nextRound
       // One pre-pass job collects everything the driver needs (and
-      // materializes the cache): rounds for the ordering guard AND the
-      // special-accounts doc of the newest block.
-      val roundInfo = all.map { b =>
-        (b.round, BlockTransforms.specialAccountsJson(b))
+      // materializes the cache): rounds for the ordering guard, the
+      // special-accounts doc of the newest block, and every merge's
+      // touched (table, bucket) set — from the same delta rows the merge
+      // reads, so only blocks the merge will apply (round >= next) count.
+      // Tables absent from the set have no deltas this batch and are
+      // skipped entirely.
+      val nBuckets = store.nBuckets
+      val keyValues = mergeDefs.map(d => d.table -> d.keyValues)
+      val prepass = all.map { b =>
+        val touched =
+          if (b.round < next) Nil
+          else keyValues.flatMap { case (t, keysOf) =>
+            keysOf(b).map(k => t -> TableStore.bucketOfValue(k, nBuckets)).distinct
+          }
+        (b.round, BlockTransforms.specialAccountsJson(b), touched)
       }.collect().toSeq
-      mark("prepass")
-      val fresh = orderingGuard(roundInfo.map(_._1), next)
+      val fresh = orderingGuard(prepass.map(_._1), next)
       if (fresh.isEmpty) return
       val lastRound = fresh.last
-      val specialAccounts = roundInfo.filter(_._1 == lastRound).head._2
+      val specialAccounts = prepass.collectFirst { case (r, s, _) if r == lastRound => s }.get
+      val touchedAll: Map[String, Seq[Int]] =
+        prepass.flatMap(_._3).distinct.groupMap(_._1)(_._2)
 
       // Narrow re-read of the cache; partition count sized to the batch so
       // small micro-batches don't schedule defaultParallelism mostly-empty
@@ -89,7 +130,7 @@ object BlockIngest {
       // a large backfill batch keeps the source's full parallelism.
       val k = math.max(1, math.min(fresh.size, all.getNumPartitions))
       val blocks = all.filter(_.round >= next).coalesce(k)
-      def deltaDf[T <: Product : org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
+      def deltaDf[T <: Product : org.apache.spark.sql.Encoder : ClassTag](
           f: Block => Seq[T]): DataFrame =
         spark.createDataset(blocks.flatMap(f)).toDF()
 
@@ -102,39 +143,6 @@ object BlockIngest {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = BlockIngest.ingestPool
-
-      // (table, keys, payload, delta builder, keytype col, hard delete?)
-      val mergeDefs: Seq[(String, Seq[String], Seq[String], () => DataFrame,
-          Option[(String, String)], Boolean)] = Seq(
-        ("account", Seq("addr"),
-          Seq("microalgos", "rewardsbase", "rewards_total", "account_data"),
-          () => deltaDf(DeltaTransforms.accountDeltaRows),
-          Some(("ktPresent", "keytype")), false),
-        ("asset", Seq("id"), Seq("creator_addr", "params"),
-          () => deltaDf(DeltaTransforms.assetDeltaRows), None, false),
-        ("account_asset", Seq("addr", "assetid"), Seq("amount", "frozen"),
-          () => deltaDf(DeltaTransforms.accountAssetDeltaRows), None, false),
-        ("app", Seq("id"), Seq("creator", "params"),
-          () => deltaDf(DeltaTransforms.appDeltaRows), None, false),
-        ("account_app", Seq("addr", "app"), Seq("localstate"),
-          () => deltaDf(DeltaTransforms.accountAppDeltaRows), None, false),
-        ("app_box", Seq("app", "name"), Seq("value"),
-          () => deltaDf(DeltaTransforms.appBoxDeltaRows), None, true))
-
-      // ONE job computes every merge's touched-bucket set (previously one
-      // distinct+collect job per table): union the per-table key-hash
-      // projections, tagged by table name. Tables absent from the result
-      // have no deltas this batch and are skipped entirely.
-      val touchedAll: Map[String, Seq[Int]] = mergeDefs
-        .map { case (t, keys, _, mkDeltas, _, _) =>
-          mkDeltas().select(lit(t).as("t"),
-            pmod(xxhash64(col(keys.head)), lit(store.nBuckets)).cast("int").as("b"))
-        }
-        .reduce(_ union _)
-        .distinct().collect()
-        .groupBy(_.getString(0))
-        .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq }
-      mark("touched-union")
 
       // Appends STAGE their files (invisible to readers) and report the
       // file lists; state merges publish via bucket-dir swap as before.
@@ -149,15 +157,13 @@ object BlockIngest {
         Future {
           Some("block_header" -> store.stageAppend("block_header",
             conform(deltaDf(b => Seq(BlockTransforms.headerRow(b))), "block_header")))
-        }) ++ mergeDefs.flatMap { case (t, keys, payload, mkDeltas, ktCol, hard) =>
-          touchedAll.get(t).map(touched => Future {
-            if (hard) mergeHard(store, t, keys, payload, mkDeltas(), touched)
-            else mergeSoft(store, t, keys, payload, mkDeltas(), touched, ktCol)
+        }) ++ mergeDefs.flatMap { d =>
+          touchedAll.get(d.table).map(touched => Future {
+            merge(store, d, d.deltas(spark, blocks), touched)
             None
           })
         }
       val staged = Await.result(Future.sequence(writes), Duration.Inf).flatten
-      mark("writes")
 
       // B7 + watermark bump + append-manifest publication — ONE metadata
       // log record is the single commit point of the micro-batch: a crash
@@ -184,7 +190,6 @@ object BlockIngest {
           TableStore.MetaSpecialAccounts -> specialAccounts,
           TableStore.MetaNextRound -> (lastRound + 1).toString),
         appends = manifestAppends ++ indexAppends)
-      mark("commit")
 
       // Compaction cadence: once a range bucket is SEALED (the watermark
       // moved past it), fold its per-batch file-sets into one — at most
@@ -193,7 +198,6 @@ object BlockIngest {
       // a no-op on every batch that doesn't seal a bucket.
       val activeRbkt = (lastRound + 1) / store.roundsPerPartition
       staged.foreach { case (t, _) => store.compactSealed(t, activeRbkt) }
-      mark("compact")
     } finally all.unpersist()
   }
 
@@ -246,25 +250,14 @@ object BlockIngest {
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
 
-  // Single Spark job each: read the touched buckets, merge, write to
-  // staging, swap (writeStateBuckets) — the old localCheckpoint
-  // materialization job is gone; staging severs the read-own-write hazard.
-  private def mergeSoft(
-      store: TableStore, table: String, keys: Seq[String], payload: Seq[String],
-      deltas: DataFrame, touched: Seq[Int],
-      ktCol: Option[(String, String)] = None): Unit = {
-    if (touched.isEmpty) return
-    val state = store.readStateBuckets(table, touched)
-    val merged = StateMerge.mergeSoftDelete(state, deltas, keys, payload, ktCol)
-    store.writeStateBuckets(table, keys.head, conform(merged, table), touched)
-  }
-
-  private def mergeHard(
-      store: TableStore, table: String, keys: Seq[String], payload: Seq[String],
-      deltas: DataFrame, touched: Seq[Int]): Unit = {
-    if (touched.isEmpty) return
-    val state = store.readStateBuckets(table, touched)
-    val merged = StateMerge.mergeHardDelete(state, deltas, keys, payload)
-    store.writeStateBuckets(table, keys.head, conform(merged, table), touched)
+  // Read the touched buckets, merge (one keyed aggregate), write to
+  // staging, swap (writeStateBuckets) — staging severs the read-own-write
+  // hazard without a materialization job.
+  private def merge(store: TableStore, d: MergeDef, deltas: DataFrame, touched: Seq[Int]): Unit = {
+    val state = store.readStateBuckets(d.table, touched)
+    val merged =
+      if (d.hard) StateMerge.mergeHardDelete(state, deltas, d.keys, d.payload)
+      else StateMerge.mergeSoftDelete(state, deltas, d.keys, d.payload, d.ktCol)
+    store.writeStateBuckets(d.table, d.keys.head, conform(merged, d.table), touched)
   }
 }

@@ -38,6 +38,13 @@ import scala.util.Using
   * racing a live writer's bucket swap could otherwise collide with its
   * renames; `_`-prefixed dirs are invisible to Spark's file index anyway,
   * and the writer heals on its own open/commit path).
+  *
+  * The store owns its local file layer: opening one routes the session's
+  * `file` scheme through [[ForkFreeLocalFs]]. Without the native
+  * libhadoop, Hadoop sets the mode of every file and directory Spark
+  * creates by forking a `chmod` process (~5 ms each, hundreds per
+  * micro-batch); the fork-free layer sets the same bits in-process. Only
+  * the `file` scheme is affected — a store on HDFS or S3 is untouched.
   */
 final class TableStore(val spark: SparkSession, val root: String, val nBuckets: Int = 16,
                        val roundsPerPartition: Long = 10000L, val readOnly: Boolean = false,
@@ -45,6 +52,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   import TableStore._
 
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  ForkFreeLocalFs.install(spark.sparkContext.hadoopConfiguration)
 
   private def path(table: String) = s"$root/$table"
 
@@ -430,23 +438,11 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     else df.filter(col("bkt").isin(buckets: _*)).drop("bkt")
   }
 
-  /** Driver-side twin of [[bucketOf]]: the bucket an exact key value lands
-    * in, computed by evaluating the same catalyst XxHash64 over a literal —
-    * bit-identical to the executor-side `xxhash64(col)` by construction
-    * (asserted in BucketPruneSpec). Lets a point lookup read ONE `bkt=N`
-    * partition instead of scanning all of them: at 100 TB / 4096 buckets
-    * the canonical account-by-address query touches 1/4096 of the table. */
-  def bucketOfValue(key: Any): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    // Literal types must match the column types xxhash64 sees (LongType
-    // ids, StringType addrs): an Int key would hash on the 4-byte path.
-    val l = key match {
-      case i: Int => Literal(i.toLong)
-      case other => Literal(other)
-    }
-    val h = new XxHash64(Seq(l)).eval(null).asInstanceOf[Long]
-    (((h % nBuckets) + nBuckets) % nBuckets).toInt
-  }
+  /** Driver-side twin of [[bucketOf]] ([[TableStore.bucketOfValue]]):
+    * lets a point lookup read ONE `bkt=N` partition instead of scanning
+    * all of them — at 100 TB / 4096 buckets the canonical
+    * account-by-address query touches 1/4096 of the table. */
+  def bucketOfValue(key: Any): Int = TableStore.bucketOfValue(key, nBuckets)
 
   /** Point-lookup read: just the single bucket `key` hashes to. The caller
     * still applies the exact-key filter; the bucket only bounds the scan. */
@@ -681,7 +677,25 @@ object TableStore {
     "txn_participation" -> Seq("addr"))
 
   def bloomKey(table: String, keyCol: String): String = s"bloom.$keyCol.$table"
+
   def roundStatsKey(table: String): String = s"roundstats.$table"
+
+  /** The bucket an exact key value lands in, computed by evaluating the
+    * same catalyst XxHash64 over a literal — bit-identical to the
+    * executor-side `pmod(xxhash64(col), nBuckets)` of the store's `bucketOf`
+    * by construction (asserted in BucketPruneSpec). Plain code, so
+    * executors call it too (ingest's pre-pass buckets delta keys). */
+  def bucketOfValue(key: Any, nBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    // Literal types must match the column types xxhash64 sees (LongType
+    // ids, StringType addrs): an Int key would hash on the 4-byte path.
+    val l = key match {
+      case i: Int => Literal(i.toLong)
+      case other => Literal(other)
+    }
+    val h = new XxHash64(Seq(l)).eval(null).asInstanceOf[Long]
+    (((h % nBuckets) + nBuckets) % nBuckets).toInt
+  }
 
   private[ingest] val swapLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 

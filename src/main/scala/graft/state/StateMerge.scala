@@ -1,13 +1,13 @@
 package graft.state
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** The C-family stateful merge (SURVEY.md §2.C): keyed last-writer-wins
   * upsert with SCD-style lineage columns, reproducing the reference's 15
   * `INSERT ... ON CONFLICT (pk) DO UPDATE` prepared statements
-  * (writer.go:39-114) as one declarative full-outer merge:
+  * (writer.go:39-114) as one declarative keyed aggregate:
   *
   *   - payload columns: last delta in round order wins; absent key keeps
   *     current state (ON CONFLICT updates only payload columns);
@@ -25,56 +25,40 @@ import org.apache.spark.sql.functions._
   *     created_at = closed_at = round (the create-delete-same-round family
   *     of golden tests).
   *
-  * Scale notes: the merge is a single shuffle on the primary key (the
-  * delta side is reduced map-side first). graft.ingest.TableStore stores
+  * Scale notes: each merge is ONE keyed aggregate over the union of the
+  * state rows and the delta rows — a single shuffle on the primary key,
+  * no windows and no joins. State rows sort below every delta, so the
+  * "last" row of a key is its final face. graft.ingest.TableStore stores
   * state hash-bucketed on the key so only touched buckets are read and
   * rewritten — merge cost tracks batch size, not accumulated state size.
   */
 object StateMerge {
 
-  /** Reduce a delta frame to one row per key: final payload by round order,
-    * plus `_first_round` / `_last_delete_round` lineage aggregates.
-    * `ktCol` marks the optional presence-gated column (account.keytype).
-    *
-    * Ordering is (round, seq) desc: `seq` is the statement's position
-    * within its block, so two statements for the same key in one block
-    * resolve to the later one — the order the reference applies them in —
-    * instead of an arbitrary tie pick. Frames without a seq column (ad-hoc
-    * callers) fall back to round-only ordering.
-    */
-  def reduceDeltas(deltas: DataFrame, keys: Seq[String], ktCol: Option[(String, String)]): DataFrame = {
-    val keyCols = keys.map(col)
-    val ord =
-      if (deltas.columns.contains("seq")) Seq(desc("round"), desc("seq"))
-      else Seq(desc("round"))
-    val w = Window.partitionBy(keyCols: _*).orderBy(ord: _*)
-    val lineage = deltas.groupBy(keyCols: _*).agg(
-      min("round").as("_first_round"),
-      max(when(col("isDelete"), col("round"))).as("_last_delete_round"))
-    val last = deltas
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-    val withLineage = last.join(lineage, keys)
-    ktCol match {
-      case Some((presentCol, valueCol)) =>
-        val ktLast = deltas
-          .filter(col(presentCol))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .select(keyCols :+ col(valueCol).as("_kt_value") :+ lit(true).as("_kt_present"): _*)
-        withLineage
-          .drop(presentCol, valueCol)
-          .join(ktLast, keys, "left_outer")
-      case None => withLineage
-    }
-  }
+  /** Order of a row within its key: (src, round, seq), src 0 for the state
+    * row and 1 for deltas. `seq` is the statement's position within its
+    * block, so two statements for the same key in one block resolve to the
+    * later one — the order the reference applies them in — instead of an
+    * arbitrary tie pick. Frames without a seq column (ad-hoc callers) fall
+    * back to round-only ordering. */
+  private def stateOrder: Column = struct(lit(0).as("src"), lit(0L).as("round"), lit(0).as("seq"))
 
-  /** Full-outer merge of current state with reduced deltas.
+  private def deltaOrder(deltas: DataFrame): Column = struct(lit(1).as("src"),
+    col("round").cast(LongType).as("round"),
+    (if (deltas.columns.contains("seq")) col("seq").cast(IntegerType) else lit(0)).as("seq"))
+
+  /** A delta column cast to the state table's type (the case-class encoder
+    * hands `account_asset.amount` over as Decimal(38,18)). */
+  private def asState(state: DataFrame, c: String): Column =
+    col(c).cast(state.schema(c).dataType).as(c)
+
+  private def nullOf(state: DataFrame, c: String): Column =
+    lit(null).cast(state.schema(c).dataType).as(c)
+
+  /** Soft-delete merge of current state with deltas.
     *
     * @param payload  payload column names (delta overwrites state)
-    * @param ktCol    optional presence-gated column kept from state unless
-    *                 a delta carried it
+    * @param ktCol    optional presence-gated column (presence flag, value)
+    *                 kept from state unless a delta carried it
     */
   def mergeSoftDelete(
       state: DataFrame,
@@ -82,46 +66,46 @@ object StateMerge {
       keys: Seq[String],
       payload: Seq[String],
       ktCol: Option[(String, String)] = None): DataFrame = {
-    val reduced = reduceDeltas(deltas, keys, ktCol).withColumn("_in_batch", lit(true))
-    val d = reduced.columns.filterNot(keys.contains).foldLeft(reduced) {
-      (df, c) => df.withColumnRenamed(c, s"_d_$c")
-    }
-    val joined = state.join(d, keys, "full_outer")
-    val inBatch = coalesce(col("_d__in_batch"), lit(false))
-
-    def pick(c: String): Column = when(inBatch, col(s"_d_$c")).otherwise(col(c)).as(c)
-
-    val outCols: Seq[Column] =
-      keys.map(col) ++
-        payload.map(pick) ++
-        Seq(
-          when(inBatch, col("_d_isDelete")).otherwise(col("deleted")).as("deleted"),
-          coalesce(col("created_at"), col("_d__first_round")).as("created_at"),
-          coalesce(col("_d__last_delete_round"), col("closed_at")).as("closed_at")) ++
-        ktCol.map { case (_, valueCol) =>
-          when(coalesce(col("_d__kt_present"), lit(false)), col("_d__kt_value"))
-            .otherwise(col(valueCol)).as(valueCol)
-        }.toSeq
-
-    joined.select(outCols: _*)
+    val noRound = lit(null).cast(LongType)
+    val stateRows = state.select(keys.map(col) ++ payload.map(col) ++ Seq(
+      col("deleted"), stateOrder.as("_ord"), col("created_at"), col("closed_at"),
+      noRound.as("_round"), noRound.as("_delete_round")) ++
+      ktCol.toSeq.flatMap { case (_, v) => Seq(col(v).as("_kt"), lit(true).as("_kt_present")) }: _*)
+    val deltaRows = deltas.select((keys ++ payload).map(asState(state, _)) ++ Seq(
+      col("isDelete").as("deleted"), deltaOrder(deltas).as("_ord"),
+      nullOf(state, "created_at"), nullOf(state, "closed_at"),
+      col("round").cast(LongType).as("_round"),
+      when(col("isDelete"), col("round").cast(LongType)).as("_delete_round")) ++
+      ktCol.toSeq.flatMap { case (p, v) => Seq(asState(state, v).as("_kt"), col(p).as("_kt_present")) }: _*)
+    stateRows.unionByName(deltaRows)
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(struct((payload :+ "deleted").map(col): _*), col("_ord")).as("_last"),
+        (Seq(max("created_at").as("_created_at"), min("_round").as("_first_round"),
+          max("closed_at").as("_closed_at"), max("_delete_round").as("_last_delete_round")) ++
+          ktCol.map(_ => max_by(col("_kt"), when(col("_kt_present"), col("_ord"))).as("_kt"))): _*)
+      .select(keys.map(col) ++ payload.map(c => col(s"_last.$c").as(c)) ++ Seq(
+        col("_last.deleted").as("deleted"),
+        coalesce(col("_created_at"), col("_first_round")).as("created_at"),
+        coalesce(col("_last_delete_round"), col("_closed_at")).as("closed_at")) ++
+        ktCol.map { case (_, v) => col("_kt").as(v) }: _*)
   }
 
   /** app_box semantics (C7): plain upsert, HARD delete (`DELETE FROM`),
-    * no lineage columns (writer.go:108-113, delete matrix golden tests). */
+    * no lineage columns (writer.go:108-113, delete matrix golden tests):
+    * a key whose last operation is a delete is dropped. */
   def mergeHardDelete(
       state: DataFrame,
       deltas: DataFrame,
       keys: Seq[String],
       payload: Seq[String]): DataFrame = {
-    val reduced = reduceDeltas(deltas, keys, None).withColumn("_in_batch", lit(true))
-    val d = reduced.columns.filterNot(keys.contains).foldLeft(reduced) {
-      (df, c) => df.withColumnRenamed(c, s"_d_$c")
-    }
-    val joined = state.join(d, keys, "full_outer")
-    val inBatch = coalesce(col("_d__in_batch"), lit(false))
-    joined
-      .filter(!(inBatch && col("_d_isDelete"))) // hard delete drops the row
-      .select(keys.map(col) ++ payload.map(c =>
-        when(inBatch, col(s"_d_$c")).otherwise(col(c)).as(c)): _*)
+    val stateRows = state.select(keys.map(col) ++ payload.map(col) ++
+      Seq(lit(false).as("_del"), stateOrder.as("_ord")): _*)
+    val deltaRows = deltas.select((keys ++ payload).map(asState(state, _)) ++
+      Seq(col("isDelete").as("_del"), deltaOrder(deltas).as("_ord")): _*)
+    stateRows.unionByName(deltaRows)
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(struct((payload :+ "_del").map(col): _*), col("_ord")).as("_last"))
+      .filter(!col("_last._del"))
+      .select(keys.map(col) ++ payload.map(c => col(s"_last.$c").as(c)): _*)
   }
 }

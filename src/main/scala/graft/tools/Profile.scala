@@ -14,12 +14,12 @@ object Profile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
     val doExplain = args.contains("explain")
-    // core count via the bench's own env knob so anti-scaling (@8 vs @32)
-    // can be attributed in one tool
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // core count via the bench's own env knob (and default) so
+    // anti-scaling can be attributed in one tool
+    val cpus = graft.Bench.cpus()
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -12,10 +12,11 @@ object StreamJobProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("engine_stream_corpus")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    // same env knob as Bench so anti-scaling (@8 vs @32) attributes in one tool
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // core count via the bench's own env knob (and default) so
+    // anti-scaling can be attributed in one tool
+    val cpus = graft.Bench.cpus()
     val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
