@@ -3,8 +3,10 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.LocalScan
 import graft.codec.CanonicalJson
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.SortedSet
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -45,6 +47,20 @@ import scala.util.Using
   * creates by forking a `chmod` process (~5 ms each, hundreds per
   * micro-batch); the fork-free layer sets the same bits in-process. Only
   * the `file` scheme is affected — a store on HDFS or S3 is untouched.
+  *
+  * Read-API scans ([[readRounds]], [[readRoundsForKey]], [[queryState]])
+  * run on the driver when small: once manifest, bloom and bucket pruning
+  * have picked the files, and those total no more than the session's
+  * `spark.sql.autoBroadcastJoinThreshold` (Spark's own "small enough for
+  * the driver" bound, 10 MB by default; a value ≤ 0 turns the local path
+  * off), they are decoded in the calling thread and returned as a
+  * `LocalRelation`. Filters, projections, limits and (through
+  * [[graft.plans.LocalSortFold]], installed by the constructor) sorts
+  * over those rows fold on the driver, so a point or range lookup
+  * collects without a Spark job — the time such a request spent was
+  * Spark's fixed per-job cost, not I/O. Larger file sets keep the
+  * distributed scan. Ingest, compaction, pruning, [[read]] and
+  * [[createViews]] always read distributed.
   */
 final class TableStore(val spark: SparkSession, val root: String, val nBuckets: Int = 16,
                        val roundsPerPartition: Long = 10000L, val readOnly: Boolean = false,
@@ -53,6 +69,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
 
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
   ForkFreeLocalFs.install(spark.sparkContext.hadoopConfiguration)
+  graft.plans.LocalSortFold.install(spark)
 
   private def path(table: String) = s"$root/$table"
 
@@ -156,6 +173,24 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     else
       spark.read.schema(Schemas(table)).parquet(files.map(f => s"${path(table)}/$f"): _*)
 
+  /** A read-API scan of committed files: on the driver when they total no
+    * more than [[LocalScan.threshold]], else distributed. */
+  private def scanManifest(table: String, files: Seq[String]): DataFrame =
+    scanLocal(table, files.map(f => Paths.get(s"${path(table)}/$f")))
+      .getOrElse(readManifest(table, files))
+
+  /** The files decoded on the driver, or None when the local path is off
+    * or they are too large for it. */
+  private def scanLocal(table: String, files: Seq[Path]): Option[DataFrame] = {
+    val limit = LocalScan.threshold(spark)
+    if (limit <= 0) return None
+    val sized = files.map(p => (p.toString, Files.size(p)))
+    if (sized.map(_._2).sum > limit) None
+    else Some(localReaders.computeIfAbsent(table, t => new LocalScan.Reader(spark, Schemas(t))).frame(sized))
+  }
+
+  private val localReaders = new java.util.concurrent.ConcurrentHashMap[String, LocalScan.Reader]()
+
   /** Range bucket of a file path (`rbkt=N/part-….parquet` → N). */
   private def rbktOf(rel: String): Long =
     rel.takeWhile(_ != '/').stripPrefix("rbkt=").toLong
@@ -164,17 +199,18 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * range-bucket bound (10k-round granularity), then the per-file
     * min/max stats (batch granularity — a micro-batch's file covers only
     * its own rounds, so a point lookup lists one batch's files, not the
-    * whole bucket). Files without stats (pre-index data) pass. */
-  private[ingest] def rangeFiles(table: String, lo: Option[Long], hi: Option[Long]): Seq[String] = {
+    * whole bucket). Files without stats (pre-index data) pass. With
+    * `rounds`, a file must also cover at least one of those rounds (by
+    * its stats, or by its range bucket when it has none). */
+  private[ingest] def rangeFiles(table: String, lo: Option[Long], hi: Option[Long],
+                                 rounds: Option[SortedSet[Long]] = None): Seq[String] = {
     val stats = fileRoundStatsRaw(table)
     manifest(table).filter { f =>
       val b = rbktOf(f)
       val bLo = b * roundsPerPartition
-      val bHi = bLo + roundsPerPartition - 1
-      lo.forall(_ <= bHi) && hi.forall(_ >= bLo) &&
-        stats.get(f).forall { case (fLo, fHi) =>
-          lo.forall(_ <= fHi) && hi.forall(_ >= fLo)
-        }
+      val (fLo, fHi) = stats.getOrElse(f, (bLo, bLo + roundsPerPartition - 1))
+      lo.forall(_ <= fHi) && hi.forall(_ >= fLo) &&
+        rounds.forall(_.minAfter(fLo).exists(_ <= fHi))
     }
   }
 
@@ -192,13 +228,15 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     )._2.asInstanceOf[Map[String, (Long, Long)]]
   }
 
-  /** Append-table read pruned to [lo, hi] (inclusive, either side open):
-    * the manifest is filtered driver-side to the range buckets that can
-    * intersect, so Spark never even lists files outside the range. Callers
-    * still apply the exact `round` predicate — parquet row-group stats
-    * prune within the surviving files. */
-  def readRounds(table: String, lo: Option[Long], hi: Option[Long]): DataFrame =
-    readManifest(table, rangeFiles(table, lo, hi))
+  /** Append-table read pruned to [lo, hi] (inclusive, either side open)
+    * and, with `rounds`, to files covering one of those rounds: the
+    * manifest is filtered driver-side, so no file outside the range is
+    * listed. Callers still apply the exact `round` predicate — parquet
+    * row-group stats prune within the surviving files. Small file sets
+    * are read on the driver (class doc). */
+  def readRounds(table: String, lo: Option[Long], hi: Option[Long],
+                 rounds: Option[SortedSet[Long]] = None): DataFrame =
+    scanManifest(table, rangeFiles(table, lo, hi, rounds))
 
   // ── Per-file key-bloom index (see FileBloom) ────────────────────────
   //
@@ -303,26 +341,26 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * bloom-negative files are pruned driver-side; files with no bloom
     * entry (pre-index data) are conservatively kept. */
   def bloomCandidateFiles(table: String, keyCol: String, key: String,
-      lo: Option[Long] = None, hi: Option[Long] = None): Seq[String] = {
+      lo: Option[Long] = None, hi: Option[Long] = None,
+      rounds: Option[SortedSet[Long]] = None): Seq[String] = {
     val blooms = fileBloomDecoded(table, keyCol)
-    rangeFiles(table, lo, hi).filter { f =>
+    rangeFiles(table, lo, hi, rounds).filter { f =>
       blooms.get(f).forall(_.mightContain(key))
     }
   }
 
   /** Point read for a key lookup: only bloom-candidate files are listed.
     * Callers still apply the exact predicate (bloom false positives and
-    * row selection). */
+    * row selection). Small file sets are read on the driver (class doc). */
   def readRoundsForKey(table: String, keyCol: String, key: String,
-      lo: Option[Long], hi: Option[Long]): DataFrame =
-    readManifest(table, bloomCandidateFiles(table, keyCol, key, lo, hi))
+      lo: Option[Long], hi: Option[Long],
+      rounds: Option[SortedSet[Long]] = None): DataFrame =
+    scanManifest(table, bloomCandidateFiles(table, keyCol, key, lo, hi, rounds))
 
   // txid-specific surface (kept for the optimizer rule and callers)
   def txidBloomRaw: Map[String, String] = fileBloomRaw("txn", "txid")
   def txidCandidateFiles(txid: String, lo: Option[Long] = None, hi: Option[Long] = None): Seq[String] =
     bloomCandidateFiles("txn", "txid", txid, lo, hi)
-  def readRoundsForTxid(txid: String, lo: Option[Long], hi: Option[Long]): DataFrame =
-    readRoundsForKey("txn", "txid", txid, lo, hi)
 
   /** Post-rewrite index maintenance: drop entries for files that left
     * the manifest, rebuild entries for rewritten files. These are full
@@ -446,8 +484,32 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
 
   /** Point-lookup read: just the single bucket `key` hashes to. The caller
     * still applies the exact-key filter; the bucket only bounds the scan. */
-  def readStateKeyed(table: String, key: Any): DataFrame =
-    readStateBuckets(table, Seq(bucketOfValue(key)))
+  def readStateKeyed(table: String, key: Any): DataFrame = queryState(table, Some(key))
+
+  /** A read-API query's state rows, without the bucket column: the bucket
+    * `key` hashes to when the query carries an exact key on the table's
+    * bucketing column (the Spark analogue of the reference's primary-key
+    * probe), or the whole table when `key` is None. Read on the
+    * driver when the bucket's files are small (class doc), else the
+    * partition-pruned distributed scan. The local read keeps [[read]]'s
+    * contract: crash-left swaps are healed first unless `readOnly`, and
+    * the files are listed and decoded under the table's swap lock, so a
+    * reader in this JVM never sees a half-swapped `bkt=N`. */
+  def queryState(table: String, key: Option[Any]): DataFrame = {
+    if (!readOnly) recoverStateBuckets(table)
+    val bucket = key.map(bucketOfValue)
+    val local = swapLock(table).synchronized {
+      val dirs = bucket match {
+        case Some(b) => Seq(Paths.get(s"${path(table)}/bkt=$b"))
+        case None => listDir(Paths.get(path(table))).filter(_.getFileName.toString.startsWith("bkt="))
+      }
+      scanLocal(table, dirs.flatMap(listDir).filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
+      }.sorted)
+    }
+    local.getOrElse(bucket.fold(readState(table))(b => readStateBuckets(table, Seq(b))))
+  }
 
   /** Replace the given buckets with the merged content: stage-then-swap.
     *

@@ -5,7 +5,9 @@ import graft.ingest.TableStore
 import graft.queries.QueryDef.broadcastIfSmall
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalScan
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.collection.immutable.SortedSet
 
 /** Read-side query surface (SURVEY.md §2.D): the six parameter objects of
   * idb.go re-expressed as DataFrame builders over the maintained tables.
@@ -19,6 +21,18 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * partition-prune the parquet scan; newest-first pagination is
   * ORDER BY ... DESC LIMIT n (TakeOrderedAndProject — per-partition heap,
   * no global sort shuffle).
+  *
+  * Small reads run no Spark job: when pruning leaves files totalling no
+  * more than the session's `spark.sql.autoBroadcastJoinThreshold`, the
+  * store decodes them on the driver ([[TableStore]]'s local path) and the
+  * filters, sort and limit fold over those rows at planning time. That
+  * covers txid, round-range, asset and address transaction lookups,
+  * `getBlock`, and the state-table shapes; an address's participation
+  * slice read this way resolves to its `(round, intra)` pairs on the
+  * driver and filters the txn read directly. Joins and aggregates (the
+  * account resource expansion, `hasAssetId`, inner-to-root conversion)
+  * still run as jobs, and a threshold ≤ 0 restores the distributed plan
+  * everywhere.
   */
 object Api {
 
@@ -190,15 +204,6 @@ object Api {
   private[query] def sigTypeCond(st: String): Column =
     bodyFilter(Seq(b => sigTypeCond(st, b)))
 
-  /** State-table read, bucket-pruned to the key's single `bkt=N` partition
-    * when the query carries an exact key on the table's bucketing column
-    * (the Spark analogue of the reference's primary-key index probe). */
-  private def stateFor(store: TableStore, table: String, key: Option[Any]): DataFrame =
-    key match {
-      case Some(k) => store.readStateKeyed(table, k)
-      case None => store.readState(table)
-    }
-
   // ── Transactions (idb.go:180-233) ──────────────────────────────────
 
   def transactions(store: TableStore, f: TransactionFilter): (DataFrame, Long) = {
@@ -239,16 +244,38 @@ object Api {
       }
     }
 
+    // Address participation (§2.E row 1): the per-address slice of
+    // txn_participation. Address blooms prune its read the way txid
+    // blooms prune txn: only files that might contain this addr are
+    // listed. A slice read on the driver is resolved to its (round,
+    // intra) pairs right here: the txn read then lists only files whose
+    // round stats cover a matched round, and the pairs filter it directly
+    // (below) — no semi-join job.
+    val participation = f.address.map { addr =>
+      var part = (
+        if (f.skipOptimization) store.readRounds("txn_participation", lo, hi)
+        else store.readRoundsForKey("txn_participation", "addr", addr, lo, hi)
+      ).filter(col("addr") === addr)
+      lo.foreach(r => part = part.filter(col("round") >= r))
+      hi.foreach(r => part = part.filter(col("round") <= r))
+      part.select("round", "intra")
+    }
+    val pairs: Option[Seq[(Long, Int)]] = participation
+      .filter(p => !f.skipOptimization && LocalScan.isLocal(p))
+      .map(_.collect().toSeq.map(r => (r.getLong(0), r.getInt(1))))
+    val rounds = pairs.map(ps => SortedSet(ps.map(_._1): _*))
+
     // Point lookups resolve through the bloom file index: only files that
     // might contain the key are listed (round-range pruning alone does
     // nothing for a random txid; for assets it is the long tail of
     // rarely-touched ids that prunes). Keys are indexed as strings — the
     // lookup stringifies the same way the index build casts.
     var txn = (f.txid, f.assetId.orElse(f.applicationId)) match {
-      case (Some(id), _) if !f.skipOptimization => store.readRoundsForTxid(id, lo, hi)
+      case (Some(id), _) if !f.skipOptimization =>
+        store.readRoundsForKey("txn", "txid", id, lo, hi, rounds)
       case (_, Some(a)) if !f.skipOptimization =>
-        store.readRoundsForKey("txn", "asset", a.toString, lo, hi)
-      case _ => store.readRounds("txn", lo, hi)
+        store.readRoundsForKey("txn", "asset", a.toString, lo, hi, rounds)
+      case _ => store.readRounds("txn", lo, hi, rounds)
     }
     if (emptyByTime) txn = txn.filter(lit(false))
     // Exact predicates on top of the pruned scan (row-group stats finish
@@ -304,20 +331,18 @@ object Api {
     val bodyConds = body.result()
     if (bodyConds.nonEmpty) txn = txn.filter(bodyFilter(bodyConds))
 
-    // Address participation semi-join (§2.E row 1): filter the tiny
-    // per-address slice of txn_participation, broadcast it into the semi
-    // join when small.
+    // The address's transactions: the resolved pairs as one set-membership
+    // filter on a (round, intra) key, else the slice broadcast into a
+    // semi-join when small. Both answer with the join keys first.
+    (participation, pairs) match {
+      case (_, Some(ps)) =>
+        txn = txn.filter(pairKey(col("round"), col("intra")).isin(ps.map { case (r, i) => pairKey(r, i) }: _*))
+          .select(("round" +: "intra" +: txn.columns.filterNot(Set("round", "intra"))).map(col): _*)
+      case (Some(part), None) =>
+        txn = txn.join(broadcastIfSmall(part), Seq("round", "intra"), "left_semi")
+      case _ =>
+    }
     f.address.foreach { addr =>
-      // Address blooms prune the participation read the way txid blooms
-      // prune txn: only files that might contain this addr are listed.
-      var part = (
-        if (f.skipOptimization) store.readRounds("txn_participation", lo, hi)
-        else store.readRoundsForKey("txn_participation", "addr", addr, lo, hi)
-      ).filter(col("addr") === addr)
-      lo.foreach(r => part = part.filter(col("round") >= r))
-      hi.foreach(r => part = part.filter(col("round") <= r))
-      txn = txn.join(broadcastIfSmall(part.select("round", "intra")),
-        Seq("round", "intra"), "left_semi")
       if (f.addressRole != 0) txn = txn.filter(roleRefinement(addr, f.addressRole))
     }
 
@@ -339,6 +364,11 @@ object Api {
     f.limit.foreach(n => txn = txn.limit(n))
     (txn, asOf)
   }
+
+  /** One Long per (round, intra): intra is a non-negative Int and rounds
+    * stay far below 2^31, so the packing is injective. */
+  private def pairKey(round: Column, intra: Column): Column = round * (1L << 32) + intra
+  private def pairKey(round: Long, intra: Int): Long = (round << 32) + intra
 
   /** AddressRole refinement: which body field carries the address
     * (idb.go:185-189 + address_role.go). One parsed-struct conjunct, same
@@ -393,7 +423,7 @@ object Api {
 
   def accounts(store: TableStore, q: AccountQueryOptions): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var acct = stateFor(store, "account", q.equalToAddress)
+    var acct = store.queryState("account", q.equalToAddress)
     if (!q.includeDeleted) acct = acct.filter(!col("deleted"))
     q.equalToAddress.foreach(a => acct = acct.filter(col("addr") === a))
     q.greaterThanAddress.foreach(a => acct = acct.filter(col("addr") > a))
@@ -434,7 +464,7 @@ object Api {
     val selected = broadcastIfSmall(acct.select("addr").distinct())
     def expand(src: String, keyOut: String, valueCols: Seq[String], alias: String): Unit = {
       var res =
-        if (keyOut == "addr") stateFor(store, src, q.equalToAddress)
+        if (keyOut == "addr") store.queryState(src, q.equalToAddress)
         else store.readState(src)
       if (!q.includeDeleted) res = res.filter(!col("deleted"))
       val packed = res.withColumnRenamed(keyOut, "addr")
@@ -452,9 +482,9 @@ object Api {
     // Counts only the page's accounts (semi-join before the groupBy) —
     // the guard protects the RETURNED accounts, not the whole corpus.
     q.maxResources.foreach { maxR =>
-      val aa = stateFor(store, "account_asset", q.equalToAddress).filter(!col("deleted"))
+      val aa = store.queryState("account_asset", q.equalToAddress).filter(!col("deleted"))
         .join(selected, Seq("addr"), "left_semi").groupBy("addr").agg(count(lit(1)).as("n1"))
-      val ap = stateFor(store, "account_app", q.equalToAddress).filter(!col("deleted"))
+      val ap = store.queryState("account_app", q.equalToAddress).filter(!col("deleted"))
         .join(selected, Seq("addr"), "left_semi").groupBy("addr").agg(count(lit(1)).as("n2"))
       val counts = aa.join(ap, Seq("addr"), "full_outer")
         .select(col("addr"),
@@ -473,7 +503,7 @@ object Api {
 
   def assets(store: TableStore, q: AssetsQuery): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var df = stateFor(store, "asset", q.assetId)
+    var df = store.queryState("asset", q.assetId)
     if (!q.includeDeleted) df = df.filter(!col("deleted"))
     q.assetId.foreach(id => df = df.filter(col("id") === id))
     q.assetIdGreaterThan.foreach(id => df = df.filter(col("id") > id))
@@ -495,7 +525,7 @@ object Api {
 
   def assetBalances(store: TableStore, q: AssetBalanceQuery): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var df = stateFor(store, "account_asset", q.address)
+    var df = store.queryState("account_asset", q.address)
     if (!q.includeDeleted) df = df.filter(!col("deleted"))
     q.assetId.foreach(id => df = df.filter(col("assetid") === id))
     q.assetIdGT.foreach(id => df = df.filter(col("assetid") > id))
@@ -512,7 +542,7 @@ object Api {
 
   def applications(store: TableStore, q: ApplicationQuery): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var df = stateFor(store, "app", q.applicationId)
+    var df = store.queryState("app", q.applicationId)
     if (!q.includeDeleted) df = df.filter(!col("deleted"))
     q.applicationId.foreach(id => df = df.filter(col("id") === id))
     q.applicationIdGreaterThan.foreach(id => df = df.filter(col("id") > id))
@@ -524,7 +554,7 @@ object Api {
 
   def appLocalState(store: TableStore, q: ApplicationQuery): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var df = stateFor(store, "account_app", q.address)
+    var df = store.queryState("account_app", q.address)
     if (!q.includeDeleted) df = df.filter(!col("deleted"))
     q.applicationId.foreach(id => df = df.filter(col("app") === id))
     q.applicationIdGreaterThan.foreach(id => df = df.filter(col("app") > id))
