@@ -7,16 +7,19 @@ import graft.transform.{BlockTransforms, DeltaTransforms}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 /** Batch apply of a micro-batch of blocks (SURVEY.md §3.1's Spark
-  * equivalent): ordering guard against metastate, idempotent append of
-  * txn/participation/header by round partition, six state merges, metastate
-  * bump. Structured Streaming wraps this in foreachBatch
+  * equivalent): ordering guard against metastate, staged append of
+  * txn/participation/header by round range, six staged state merges, and
+  * one metadata-log record that publishes all of them with the watermark.
+  * Structured Streaming wraps this in foreachBatch
   * (graft.streaming.StreamIngest); the reference's serializable transaction
-  * + tolerated unique violations (cockroach.go:136-199) become the
-  * round-partition overwrite + single driver-side commit point.
+  * + tolerated unique violations (cockroach.go:136-199) become staged files
+  * + that single driver-side commit point.
   *
   * Input is one JSON document per block (graft.codec.BlockCodec), parsed in
   * the executors — the recursive inner-txn tree never needs a Spark schema.
@@ -138,39 +141,34 @@ object BlockIngest {
       // state-upsert batch (cockroach.go:167-199). Same here: each append
       // and each merge targets a distinct table directory, so they are
       // independent Spark jobs — run them from a thread pool and let the
-      // scheduler interleave stages. The metastate bump below stays the
+      // scheduler interleave stages. The metastate record below stays the
       // single serial commit point.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = BlockIngest.ingestPool
 
-      // Appends STAGE their files (invisible to readers) and report the
-      // file lists; state merges publish via bucket-dir swap as before.
-      val writes: Seq[Future[Option[(String, Seq[String])]]] = Seq(
-        Future {
-          Some("txn" -> store.stageAppend("txn", conform(deltaDf(BlockTransforms.flattenBlock), "txn")))
-        },
-        Future {
-          Some("txn_participation" -> store.stageAppend("txn_participation",
-            conform(deltaDf(BlockTransforms.participationRows), "txn_participation")))
-        },
-        Future {
-          Some("block_header" -> store.stageAppend("block_header",
-            conform(deltaDf(b => Seq(BlockTransforms.headerRow(b))), "block_header")))
-        }) ++ mergeDefs.flatMap { d =>
-          touchedAll.get(d.table).map(touched => Future {
-            merge(store, d, d.deltas(spark, blocks), touched)
-            None
-          })
-        }
-      val staged = Await.result(Future.sequence(writes), Duration.Inf).flatten
+      // Every write STAGES its files (invisible to readers): appends
+      // report their file lists, merges the `set` kvs listing each
+      // touched bucket's new files.
+      val appendWrites: Seq[Future[(String, Seq[String])]] = Seq(
+        Future("txn" -> store.stageAppend("txn", conform(deltaDf(BlockTransforms.flattenBlock), "txn"))),
+        Future("txn_participation" -> store.stageAppend("txn_participation",
+          conform(deltaDf(BlockTransforms.participationRows), "txn_participation"))),
+        Future("block_header" -> store.stageAppend("block_header",
+          conform(deltaDf(b => Seq(BlockTransforms.headerRow(b))), "block_header"))))
+      val mergeWrites: Seq[Future[Seq[(String, String)]]] = mergeDefs.flatMap { d =>
+        touchedAll.get(d.table).map(touched => Future(merge(store, d, d.deltas(spark, blocks), touched)))
+      }
+      val (appendDone, mergeDone) = (settle(appendWrites), settle(mergeWrites))
+      val staged = appendDone.map(_.get)
+      val stateSets = mergeDone.flatMap(_.get)
 
-      // B7 + watermark bump + append-manifest publication — ONE metadata
-      // log record is the single commit point of the micro-batch: a crash
-      // before this line leaves only orphan files readers never resolve.
-      // The record carries ONLY the batch's delta (append ops for the
-      // staged files' manifest + index lines, set ops for the scalars) —
-      // commit cost is O(batch), flat in chain history (MetaLog).
+      // B7 + watermark bump + manifest publication for all nine tables —
+      // ONE metadata log record is the single commit point of the
+      // micro-batch: a failure before this line leaves only orphan files
+      // readers never resolve, and every table as it was. The record
+      // carries ONLY the batch's delta (append ops for the staged append
+      // files' manifest + index lines, set ops for the touched state
+      // buckets' file lists and the scalars) — commit cost is O(batch),
+      // flat in chain history (MetaLog).
       val manifestAppends = staged.collect { case (t, files) if files.nonEmpty =>
         store.manifestKey(t) -> files.mkString("\n")
       }
@@ -181,15 +179,16 @@ object BlockIngest {
       // One index-build Spark job per table; independent, so they run
       // concurrently like the writes above (the scheduler interleaves
       // them across the same cores — measured ~2× off the commit phase).
-      val indexAppends = Await.result(Future.sequence(
-        staged.map { case (t, files) =>
-          Future(store.indexAppendKvs(t, files))
-        }), Duration.Inf).flatten
+      val indexAppends = settle(staged.map { case (t, files) =>
+        Future(store.indexAppendKvs(t, files))
+      }).flatMap(_.get)
       store.commitMetastate(
-        sets = Seq(
+        sets = stateSets ++ Seq(
           TableStore.MetaSpecialAccounts -> specialAccounts,
           TableStore.MetaNextRound -> (lastRound + 1).toString),
         appends = manifestAppends ++ indexAppends)
+      // The commit retired the touched buckets' old files: delete them.
+      touchedAll.foreach { case (t, buckets) => store.sweepStateBuckets(t, buckets) }
 
       // Compaction cadence: once a range bucket is SEALED (the watermark
       // moved past it), fold its per-batch file-sets into one — at most
@@ -243,6 +242,12 @@ object BlockIngest {
 
   // ── helpers ─────────────────────────────────────────────────────────
 
+  /** Every future's outcome, after ALL of them finished: a failed batch
+    * rethrows only once no sibling write is still running, so a retry of
+    * the batch cannot race its own stale writes. */
+  private def settle[T](fs: Seq[Future[T]]): Seq[scala.util.Try[T]] =
+    fs.map(f => Await.ready(f, Duration.Inf).value.get)
+
   /** Cast to the authoritative table schema (case classes encode e.g.
     * BigDecimal as Decimal(38,18), the table stores Decimal(20,0)). */
   private[ingest] def conform(df: DataFrame, table: String): DataFrame = {
@@ -250,14 +255,16 @@ object BlockIngest {
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
 
-  // Read the touched buckets, merge (one keyed aggregate), write to
-  // staging, swap (writeStateBuckets) — staging severs the read-own-write
-  // hazard without a materialization job.
-  private def merge(store: TableStore, d: MergeDef, deltas: DataFrame, touched: Seq[Int]): Unit = {
+  // Read the touched buckets, merge (one keyed aggregate), stage the
+  // result under new file names — the files read stay untouched, which
+  // severs the read-own-write hazard without a materialization job.
+  // Returns the buckets' manifest kvs for the batch's commit.
+  private def merge(store: TableStore, d: MergeDef, deltas: DataFrame,
+                    touched: Seq[Int]): Seq[(String, String)] = {
     val state = store.readStateBuckets(d.table, touched)
     val merged =
       if (d.hard) StateMerge.mergeHardDelete(state, deltas, d.keys, d.payload)
       else StateMerge.mergeSoftDelete(state, deltas, d.keys, d.payload, d.ktCol)
-    store.writeStateBuckets(d.table, d.keys.head, conform(merged, d.table), touched)
+    store.writeStateBucketsStaged(d.table, d.keys.head, conform(merged, d.table), touched)
   }
 }

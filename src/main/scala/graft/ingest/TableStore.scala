@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.LocalScan
 import graft.codec.CanonicalJson
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.SortedSet
 import scala.jdk.CollectionConverters._
@@ -14,19 +17,15 @@ import scala.util.Using
   * (SURVEY.md §1.4, §2.A6/A7).
   *
   * Layout under `root/`:
-  *   - append tables `txn`, `txn_participation`, `block_header`:
-  *     `rbkt = round DIV roundsPerPartition` range dirs with `round` as a
-  *     data column, behind a file manifest committed atomically with the
-  *     watermark (see the append-table section below) — the Spark
-  *     replacement for the reference's tolerated COPY unique-violations
-  *     (cockroach.go:189-199): a replayed batch's files simply never make
-  *     it into the manifest;
+  *   - append tables ([[TableStore.AppendTables]]: `txn`,
+  *     `txn_participation`, `block_header`): `rbkt = round DIV
+  *     roundsPerPartition` range dirs with `round` as a data column;
   *   - state tables `account`, `account_asset`, `asset`, `app`,
   *     `account_app`, `app_box`: hash-bucketed on the primary key into
-  *     `_bucket=N` partitions, so a merge reads and rewrites only the
-  *     buckets the batch touches — cost tracks batch size, not table size
-  *     (the 100 TB posture; an index-organized row store needs no such
-  *     trick, a file-based column store does);
+  *     `bkt=N` dirs, so a merge reads and rewrites only the buckets the
+  *     batch touches — cost tracks batch size, not table size (the 100 TB
+  *     posture; an index-organized row store needs no such trick, a
+  *     file-based column store does);
   *   - `_meta/`: the reference's metastate KV table (util.go:75-110) as an
   *     append-only metadata log with checkpoints ([[MetaLog]]) — the
   *     stream's checkpoint/watermark store (keys: state, accounts,
@@ -34,12 +33,19 @@ import scala.util.Using
   *     O(batch) record per micro-batch, a point read the executors never
   *     need.
   *
+  * One commit point for all nine tables: every table is read through a
+  * file manifest in the metastate, never by listing a directory. A batch
+  * stages its files (invisible until listed), then ONE metadata-log
+  * record publishes the append files, the touched state buckets' new
+  * file lists and the watermark together — the Spark analogue of the
+  * reference committing a block's txn COPY and state upserts in one
+  * serializable transaction (cockroach.go:136-199). A crash or failure
+  * before that record leaves only unlisted files: readers never see them
+  * and the replayed batch re-merges against the unchanged state.
+  *
   * `readOnly = true` declares a query-only session over a directory some
-  * other process writes: every mutation path throws, and reads never heal
-  * crash leftovers (`_old_bkt=N` restoration moves directories — a reader
-  * racing a live writer's bucket swap could otherwise collide with its
-  * renames; `_`-prefixed dirs are invisible to Spark's file index anyway,
-  * and the writer heals on its own open/commit path).
+  * other process writes: every mutation path throws. Reads never write,
+  * so a reader leaves a writer's uncommitted files where they are.
   *
   * The store owns its local file layer: opening one routes the session's
   * `file` scheme through [[ForkFreeLocalFs]]. Without the native
@@ -87,26 +93,11 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
 
   // ── Generic read (empty frame with the right schema if absent) ──────
 
-  def read(table: String): DataFrame = table match {
-    case "txn" | "txn_participation" | "block_header" => readManifest(table, manifest(table))
-    case _ =>
-      if (!readOnly) recoverStateBuckets(table)
-      if (listDir(Paths.get(path(table))).exists(p => !p.getFileName.toString.startsWith("_")))
-        spark.read.schema(schemaWithPartitions(table)).parquet(path(table))
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaWithPartitions(table))
-  }
+  /** Every committed row of a table. */
+  def read(table: String): DataFrame = readFiles(table, manifest(table))
 
-  // NOTE: the bucket partition column is `bkt`, NOT `_bucket` — Spark's
-  // file index treats paths starting with `_`/`.` as hidden and would skip
-  // the partition directories entirely.
-  private def schemaWithPartitions(table: String): StructType = table match {
-    case "txn" | "txn_participation" | "block_header" => Schemas(table)
-    case _ => Schemas(table).add("bkt", IntegerType, nullable = true)
-  }
-
-  /** State table without the internal bucket column. */
-  def readState(table: String): DataFrame = read(table).drop("bkt")
+  /** A state table's committed rows (the same as [[read]]). */
+  def readState(table: String): DataFrame = read(table)
 
   // ── Append tables: range dirs + manifest (the 100 TB layout) ────────
   //
@@ -136,15 +127,23 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * including `round`. */
   def stageAppend(table: String, df: DataFrame): Seq[String] = {
     requireWritable("stageAppend")
+    stage(table, df.withColumn("rbkt", (col("round") / lit(roundsPerPartition)).cast("long")), "rbkt")
+  }
+
+  /** Write `df` partitioned by `partCol` to a `_staging_*` dir (invisible
+    * to Spark's file index), then move its part files into the table's
+    * `<partCol>=N/` dirs under their unique names. Nothing is published:
+    * returns the relative paths (`<partCol>=N/part-…`) for a commit to
+    * list. */
+  private def stage(table: String, df: DataFrame, partCol: String): Seq[String] = {
     val staging = s"${path(table)}/_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.withColumn("rbkt", (col("round") / lit(roundsPerPartition)).cast("long"))
-      .write.mode("overwrite").partitionBy("rbkt").parquet(staging)
+    df.write.mode("overwrite").partitionBy(partCol).parquet(staging)
     val sdir = Paths.get(staging)
     val moved = Using.resource(Files.walk(sdir)) {
       _.iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
         .map { p =>
-          val rel = s"${p.getParent.getFileName}/${p.getFileName}" // rbkt=N/part-…
+          val rel = s"${p.getParent.getFileName}/${p.getFileName}" // <partCol>=N/part-…
           val dest = Paths.get(s"${path(table)}/$rel")
           Files.createDirectories(dest.getParent)
           Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
@@ -155,29 +154,56 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     moved
   }
 
-  /** The committed file set of an append table (relative paths). */
-  def manifest(table: String): Seq[String] =
-    metastate.get(manifestKey(table)).map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+  /** The committed file set of a table (relative paths): an append
+    * table's manifest, or the union of a state table's bucket manifests. */
+  def manifest(table: String): Seq[String] = {
+    val st = metastate
+    if (AppendTables(table)) fileLines(st.get(manifestKey(table)))
+    else (0 until nBuckets).flatMap(b => fileLines(st.get(bucketManifestKey(table, b))))
+  }
 
   def manifestKey(table: String): String = s"manifest.$table"
 
-  /** Read an explicit (relative-path) file subset of an append table —
-    * the surface index-aware rewrites use to keep a view's snapshot while
-    * shrinking its file list. */
-  def readFiles(table: String, files: Seq[String]): DataFrame =
-    readManifest(table, files)
+  /** Metastate key of one state bucket's committed file list. */
+  def bucketManifestKey(table: String, bucket: Int): String = s"manifest.$table.bkt=$bucket"
 
-  private def readManifest(table: String, files: Seq[String]): DataFrame =
+  private def fileLines(v: Option[String]): Seq[String] =
+    v.map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+
+  /** A distributed scan of an explicit (relative-path) file set — also
+    * the surface index-aware rewrites use to keep a view's snapshot while
+    * shrinking its file list. The statuses come from one local stat per
+    * file and seed the file index, so Spark lists nothing: past 32 paths
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) its own
+    * listing would run as a Spark job. Columns are nullable, as
+    * `spark.read.parquet` makes them. */
+  def readFiles(table: String, files: Seq[String]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas(table))
-    else
-      spark.read.schema(Schemas(table)).parquet(files.map(f => s"${path(table)}/$f"): _*)
+    else {
+      val fs = new HPath(path(table)).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val statuses = files.map { f =>
+        val p = Paths.get(s"${path(table)}/$f")
+        new FileStatus(Files.size(p), false, 1, 32L << 20, Files.getLastModifiedTime(p).toMillis,
+          fs.makeQualified(new HPath(p.toString)))
+      }
+      val known = statuses.map(s => s.getPath -> Array(s)).toMap
+      val schema = StructType(Schemas(table).fields.map(_.copy(nullable = true)))
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty,
+        Some(schema), new FileStatusCache {
+          override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = known.get(p)
+          override def putLeafFiles(p: HPath, leaves: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        })
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+        schema, None, new ParquetFileFormat, Map.empty)(spark))
+    }
 
   /** A read-API scan of committed files: on the driver when they total no
     * more than [[LocalScan.threshold]], else distributed. */
   private def scanManifest(table: String, files: Seq[String]): DataFrame =
     scanLocal(table, files.map(f => Paths.get(s"${path(table)}/$f")))
-      .getOrElse(readManifest(table, files))
+      .getOrElse(readFiles(table, files))
 
   /** The files decoded on the driver, or None when the local path is off
     * or they are too large for it. */
@@ -301,8 +327,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     // count (a hot addr repeated 100k times costs 10 bits, not 1 Mb).
     val aggs = Seq(min(col("round")).as("_lo"), max(col("round")).as("_hi")) ++
       keyCols.map(c => collect_set(col(c).cast("string")).as(s"_k_$c"))
-    val byRel = spark.read.schema(Schemas(table))
-      .parquet(files.map(f => s"${path(table)}/$f"): _*)
+    val byRel = readFiles(table, files)
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -385,12 +410,11 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * the new manifest immediately (maintenance op, not part of a batch). */
   def pruneRounds(table: String, keep: Long): Unit = {
     val boundary = keep / roundsPerPartition
-    val (below, above) = manifest(table).partition(f => rbktOf(f) < boundary)
-    val (atBoundary, clear) = above.partition(f => rbktOf(f) == boundary)
+    val (atBoundary, clear) =
+      manifest(table).filter(f => rbktOf(f) >= boundary).partition(f => rbktOf(f) == boundary)
     val rewritten =
       if (atBoundary.isEmpty) Nil
-      else stageAppend(table, readManifest(table, atBoundary).filter(col("round") >= keep))
-    val _ = below
+      else stageAppend(table, readFiles(table, atBoundary).filter(col("round") >= keep))
     val newManifest = clear ++ rewritten
     putMetastate((manifestKey(table) -> newManifest.mkString("\n")) +:
       bloomMaintenanceKvs(table, newManifest, rewritten): _*)
@@ -437,7 +461,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     if (oversized.isEmpty) return 0
     val keepAsIs = byBucket.view.filterKeys(b => !oversized.contains(b)).values.flatten.toSeq
     val rewritten = stageAppend(table,
-      readManifest(table, oversized.values.flatten.toSeq)
+      readFiles(table, oversized.values.flatten.toSeq)
         .repartition(oversized.size, (col("round") / lit(roundsPerPartition)).cast("long")))
     val newManifest = keepAsIs ++ rewritten
     putMetastate((manifestKey(table) -> newManifest.mkString("\n")) +:
@@ -447,158 +471,110 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   }
 
   /** Remove data files not in the committed manifest (crash leftovers,
-    * pruned-away files). Readers resolve files through the manifest, never
-    * by listing — so the only hazard is a reader still executing against a
-    * manifest older than current (its files may vanish mid-scan). Run
-    * between batches / in maintenance windows; a production deployment
-    * would add time-based retention (the Delta/Iceberg VACUUM contract). */
+    * pruned-away or retired files) from every `rbkt=`/`bkt=` dir, and
+    * crash-left `_staging_*` dirs. Readers resolve files through the
+    * manifest, never by listing — so the only hazard is a reader still
+    * executing against a manifest older than current (its files may vanish
+    * mid-scan), or a write of this table in flight. Run between batches /
+    * in maintenance windows; a production deployment would add time-based
+    * retention (the Delta/Iceberg VACUUM contract). */
   def vacuum(table: String): Unit = {
-    val keep = manifest(table).toSet
-    listDir(Paths.get(path(table)))
-      .filter(p => p.getFileName.toString.startsWith("rbkt="))
-      .foreach { bdir =>
-        listDir(bdir)
-          .filter(p => !keep.contains(s"${bdir.getFileName}/${p.getFileName}"))
-          .foreach(Files.delete)
-        if (listDir(bdir).isEmpty) Files.delete(bdir)
-      }
+    requireWritable("vacuum")
+    val children = listDir(Paths.get(path(table)))
+    def named(prefixes: String*) =
+      children.filter(p => prefixes.exists(p.getFileName.toString.startsWith))
+    named("_staging_").foreach(deleteRecursively)
+    sweep(named("rbkt=", "bkt="), manifest(table).toSet)
   }
+
+  /** Delete the files in `dirs` (partition dirs of one table) that `keep`
+    * (committed relative paths) does not list, then the dirs left empty. */
+  private def sweep(dirs: Seq[Path], keep: Set[String]): Unit =
+    dirs.foreach { bdir =>
+      listDir(bdir)
+        .filter(p => !keep.contains(s"${bdir.getFileName}/${p.getFileName}"))
+        .foreach(Files.delete)
+      if (listDir(bdir).isEmpty) Files.deleteIfExists(bdir)
+    }
 
   // ── State tables (bucketed merge target) ────────────────────────────
 
   def bucketOf(keyCol: String): org.apache.spark.sql.Column =
     pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast(IntegerType)
 
-  /** Read only the given buckets of a state table (partition-pruned scan). */
-  def readStateBuckets(table: String, buckets: Seq[Int]): DataFrame = {
-    val df = read(table)
-    if (buckets.isEmpty) df.filter(lit(false)).drop("bkt")
-    else df.filter(col("bkt").isin(buckets: _*)).drop("bkt")
+  /** A state table's committed files in the given buckets. */
+  private def bucketFiles(table: String, buckets: Seq[Int]): Seq[String] = {
+    val st = metastate
+    buckets.flatMap(b => fileLines(st.get(bucketManifestKey(table, b))))
   }
 
+  /** Read only the given buckets of a state table (their manifests'
+    * files, nothing else listed). */
+  def readStateBuckets(table: String, buckets: Seq[Int]): DataFrame =
+    readFiles(table, bucketFiles(table, buckets))
+
   /** Driver-side twin of [[bucketOf]] ([[TableStore.bucketOfValue]]):
-    * lets a point lookup read ONE `bkt=N` partition instead of scanning
-    * all of them — at 100 TB / 4096 buckets the canonical
-    * account-by-address query touches 1/4096 of the table. */
+    * lets a point lookup read ONE bucket's files instead of scanning all
+    * of them — at 100 TB / 4096 buckets the canonical account-by-address
+    * query touches 1/4096 of the table. */
   def bucketOfValue(key: Any): Int = TableStore.bucketOfValue(key, nBuckets)
 
   /** Point-lookup read: just the single bucket `key` hashes to. The caller
     * still applies the exact-key filter; the bucket only bounds the scan. */
   def readStateKeyed(table: String, key: Any): DataFrame = queryState(table, Some(key))
 
-  /** A read-API query's state rows, without the bucket column: the bucket
-    * `key` hashes to when the query carries an exact key on the table's
-    * bucketing column (the Spark analogue of the reference's primary-key
-    * probe), or the whole table when `key` is None. Read on the
-    * driver when the bucket's files are small (class doc), else the
-    * partition-pruned distributed scan. The local read keeps [[read]]'s
-    * contract: crash-left swaps are healed first unless `readOnly`, and
-    * the files are listed and decoded under the table's swap lock, so a
-    * reader in this JVM never sees a half-swapped `bkt=N`. */
-  def queryState(table: String, key: Option[Any]): DataFrame = {
-    if (!readOnly) recoverStateBuckets(table)
-    val bucket = key.map(bucketOfValue)
-    val local = swapLock(table).synchronized {
-      val dirs = bucket match {
-        case Some(b) => Seq(Paths.get(s"${path(table)}/bkt=$b"))
-        case None => listDir(Paths.get(path(table))).filter(_.getFileName.toString.startsWith("bkt="))
-      }
-      scanLocal(table, dirs.flatMap(listDir).filter { p =>
-        val name = p.getFileName.toString
-        name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
-      }.sorted)
-    }
-    local.getOrElse(bucket.fold(readState(table))(b => readStateBuckets(table, Seq(b))))
-  }
+  /** A read-API query's state rows: the bucket `key` hashes to when the
+    * query carries an exact key on the table's bucketing column (the
+    * Spark analogue of the reference's primary-key probe), or the whole
+    * table when `key` is None. Read on the driver when the files are
+    * small (class doc), else distributed. */
+  def queryState(table: String, key: Option[Any]): DataFrame =
+    scanManifest(table, key.fold(manifest(table))(k => bucketFiles(table, Seq(bucketOfValue(k)))))
 
-  /** Replace the given buckets with the merged content: stage-then-swap.
-    *
-    * The merge plan READS the buckets it replaces, so the output is first
-    * written to a staging directory (one Spark job — the old files stay
-    * untouched while the job reads them), then each touched `bkt=N` dir is
-    * swapped in with filesystem renames. This both severs the
-    * read-own-write hazard without a localCheckpoint materialization job
-    * and clears buckets whose merge result is empty (dynamic partition
-    * overwrite could not — an emptied bucket would silently survive).
-    * The `_staging` prefix keeps Spark's file index blind to in-flight
-    * output. Production analogue: a transactional table format's
-    * write-to-staging + metadata swap.
-    *
-    * The swap is RENAME-FIRST so no crash window loses pre-merge rows:
-    * `bkt=N` → `_old_bkt=N` (atomic), staged dir in (atomic), then delete
-    * `_old_bkt=N`. A crash between the two renames leaves the pre-merge
-    * rows intact under `_old_bkt=N`; [[recoverStateBuckets]] (run on every
-    * state read and before every swap) moves them back. Either recovered
-    * face is safe to replay against: the watermark hasn't advanced, and
-    * the delta merge is idempotent. The old delete-then-move order
-    * destroyed the bucket first — a crash before the move orphaned every
-    * untouched key in it, silently, because replay re-merged against an
-    * empty bucket. `_`-prefixed names stay hidden from Spark's file index.
-    */
+  /** Replace the given buckets of a state table with `merged` (rows
+    * bucketed by `keyCol`) as one commit of its own: stage, publish the
+    * buckets' new file lists, then sweep the retired files. Rows of
+    * buckets outside `touched` are dropped; a touched bucket `merged` has
+    * no rows for is emptied. For the bulk loads (genesis, a seeded
+    * state); a batch's merges go through [[writeStateBucketsStaged]] and
+    * commit with the batch. */
   def writeStateBuckets(table: String, keyCol: String, merged: DataFrame, touched: Seq[Int]): Unit = {
-    requireWritable("writeStateBuckets")
-    recoverStateBuckets(table, sweepStaging = true)
-    val staging = s"${path(table)}/_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    merged
-      .withColumn("bkt", bucketOf(keyCol))
-      .write
-      .mode("overwrite")
-      .partitionBy("bkt")
-      .parquet(staging)
-    swapLock(table).synchronized {
-      touched.foreach { b =>
-        val dir = Paths.get(s"${path(table)}/bkt=$b")
-        val old = Paths.get(s"${path(table)}/_old_bkt=$b")
-        if (Files.exists(dir)) Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
-        val src = Paths.get(s"$staging/bkt=$b")
-        if (Files.exists(src)) Files.move(src, dir, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(old)
-      }
-    }
-    // remove staging leftovers (_SUCCESS, empty dir)
-    deleteRecursively(Paths.get(staging))
+    putMetastate(writeStateBucketsStaged(table, keyCol, merged, touched): _*)
+    sweepStateBuckets(table, touched)
   }
 
-  /** Heal interrupted bucket swaps: a leftover `_old_bkt=N` whose live
-    * `bkt=N` is missing means the crash hit between the two renames —
-    * restore it; one whose live dir exists means the swap completed —
-    * drop it. Stale `_staging_*` dirs are left alone here — they are
-    * invisible to readers and may belong to an in-flight writer; the next
-    * writeStateBuckets on the table sweeps them. */
-  private[ingest] def recoverStateBuckets(table: String, sweepStaging: Boolean = false): Unit =
-    swapLock(table).synchronized {
-      listDir(Paths.get(path(table))).foreach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("_old_bkt=")) {
-          val live = Paths.get(s"${path(table)}/${name.stripPrefix("_old_")}")
-          if (Files.exists(live)) deleteRecursively(p)
-          else Files.move(p, live, StandardCopyOption.ATOMIC_MOVE)
-        } else if (sweepStaging && name.startsWith("_staging_")) deleteRecursively(p)
-      }
-    }
+  /** Stage `merged` as the new content of the `touched` buckets WITHOUT
+    * publishing it. The merge plan reads the files it replaces, so new
+    * files go under new names and the old ones stay untouched until the
+    * commit retires them. Returns one metastate `set` per touched bucket
+    * listing its new files (empty when the bucket emptied), for the
+    * caller's commit record; [[sweepStateBuckets]] after that commit
+    * deletes the retired files. (The name keeps the `writeStateBuckets`
+    * prefix: call-site phase attribution, as in perfbench's job listener,
+    * counts this job as a merge.) */
+  private[ingest] def writeStateBucketsStaged(table: String, keyCol: String, merged: DataFrame,
+                                              touched: Seq[Int]): Seq[(String, String)] = {
+    requireWritable("writeStateBuckets")
+    val byBucket = stage(table, merged.withColumn("bkt", bucketOf(keyCol)), "bkt")
+      .groupBy(_.takeWhile(_ != '/').stripPrefix("bkt=").toInt)
+    (byBucket -- touched).values.flatten.foreach(f => Files.delete(Paths.get(s"${path(table)}/$f")))
+    touched.map(b => bucketManifestKey(table, b) -> byBucket.getOrElse(b, Nil).mkString("\n"))
+  }
 
-  // Swap and recovery serialize per (root, table): without this, a
-  // concurrent reader's heal pass could restore `_old_bkt=N` in the
-  // instant between a writer's two renames and collide with the incoming
-  // move. The lock map is JVM-GLOBAL (TableStore companion), keyed by
-  // root+table, so two store instances over the same directory — the
-  // "point a query session at the same database" mode — still serialize.
-  // A separate reader PROCESS is outside the monitor by nature; the
-  // single-writer deployment contract covers it, and a crashed writer's
-  // window is healed by the on-disk `_old_bkt` protocol on next open.
-  private def swapLock(table: String): Object =
-    // normalized key: "/data/db" and "/data/db/" must map to ONE monitor
-    TableStore.swapLocks.computeIfAbsent(
-      s"${Paths.get(root).toAbsolutePath.normalize}/$table", _ => new Object)
+  /** After a commit: delete every file in the given buckets' dirs that
+    * their committed manifests do not list — the files the commit retired
+    * and any crash orphans. The writer's own cleanup; a store has a
+    * single writer. */
+  private[ingest] def sweepStateBuckets(table: String, buckets: Seq[Int]): Unit = {
+    requireWritable("sweepStateBuckets")
+    sweep(buckets.map(b => Paths.get(s"${path(table)}/bkt=$b")), bucketFiles(table, buckets).toSet)
+  }
 
   /** Register every maintained table as a temp view (plus the graft UDFs),
     * so the whole surface is queryable from `spark.sql` — the "point the
     * indexer API at the same database" usage mode of the reference. */
   def createViews(prefix: String = ""): Unit = {
-    TableStore.Schemas.keys.foreach { t =>
-      val df = if (t == "txn" || t == "txn_participation" || t == "block_header") read(t) else readState(t)
-      df.createOrReplaceTempView(prefix + t)
-    }
+    TableStore.Schemas.keys.foreach(t => read(t).createOrReplaceTempView(prefix + t))
     graft.functions.GraftFunctions.register(spark)
     graft.expressions.VectorExpressions.register(spark)
     graft.plans.TxidIndexPruneRule.install(spark, this)
@@ -607,11 +583,10 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   /** Snapshot views for SQL users: the append tables as of `version`,
     * registered as `<prefix><table>` (e.g. prefix "v123_" → `v123_txn`)
     * — the SQL face of [[readAsOf]], same retention/vacuum contract.
-    * State tables keep no per-version file sets, so only the append
-    * tables get a view. */
+    * Only the append tables get a view ([[readAsOf]]). */
   def createViewsAsOf(version: Long, prefix: String): Unit = {
     require(prefix.nonEmpty, "snapshot views need a distinguishing prefix")
-    Seq("txn", "txn_participation", "block_header").foreach { t =>
+    AppendTables.foreach { t =>
       readAsOf(t, version).createOrReplaceTempView(prefix + t)
     }
   }
@@ -642,8 +617,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
 
   /** An append table's committed file set as of `version`. */
   def manifestAt(table: String, version: Long): Seq[String] =
-    metastateAt(version).get(manifestKey(table))
-      .map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    fileLines(metastateAt(version).get(manifestKey(table)))
 
   /** Snapshot (time-travel) read of an append table: exactly the rows
     * committed as of metadata-log `version` — what a reproducible corpus
@@ -651,12 +625,13 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * Valid until an explicit `vacuum`/`compact(vacuumAfter)` physically
     * removes files the old manifest references (`compactSealed` only
     * REPLACES files logically, so snapshots survive the in-loop
-    * compaction cadence). Append tables only: state tables are LWW-merged
-    * in place and keep no per-version file sets. */
+    * compaction cadence). Append tables only: a state commit's sweep
+    * deletes the files it retires, so an old state manifest's files are
+    * gone as soon as a newer batch rewrites its buckets. */
   def readAsOf(table: String, version: Long): DataFrame = {
-    require(Schemas.contains(table) && isAppendTable(table),
+    require(AppendTables(table),
       s"readAsOf supports append (manifest-backed) tables, not '$table'")
-    readManifest(table, manifestAt(table, version))
+    readFiles(table, manifestAt(table, version))
   }
 
   /** Row-level diff between two pinned snapshot versions of an append
@@ -672,9 +647,6 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     b.exceptAll(a).withColumn("_op", org.apache.spark.sql.functions.lit("added"))
       .unionByName(a.exceptAll(b).withColumn("_op", org.apache.spark.sql.functions.lit("removed")))
   }
-
-  private def isAppendTable(table: String): Boolean =
-    table == "txn" || table == "txn_participation" || table == "block_header"
 
   def putMetastate(kvs: (String, String)*): Unit = {
     requireWritable("putMetastate")
@@ -713,7 +685,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     val hiScan =
       if (without.isEmpty) -1L
       else {
-        val r = readManifest("txn", without)
+        val r = readFiles("txn", without)
           .agg(org.apache.spark.sql.functions.max("round")).head
         if (r.isNullAt(0)) -1L else r.getLong(0)
       }
@@ -728,6 +700,11 @@ object TableStore {
   val MetaSpecialAccounts = "accounts"
   val MetaNetwork = "network"
   val MetaMigration = "migration"
+
+  /** The tables rows are only appended to (range-bucketed by round,
+    * snapshot-readable); every other table in [[Schemas]] is a keyed
+    * state table. */
+  val AppendTables: Set[String] = Set("txn", "txn_participation", "block_header")
 
   /** Append-table columns carrying a per-file bloom index: keys whose
     * point lookups parquet min/max stats cannot prune — uniformly random
@@ -758,8 +735,6 @@ object TableStore {
     val h = new XxHash64(Seq(l)).eval(null).asInstanceOf[Long]
     (((h % nBuckets) + nBuckets) % nBuckets).toInt
   }
-
-  private[ingest] val swapLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Authoritative table schemas (setup_cockroachdb_sql.go:5-133 →
     * SURVEY.md §1.3 type mapping). */

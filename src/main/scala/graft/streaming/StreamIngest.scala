@@ -12,10 +12,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     the ordering guard inside applyBlocks enforces round == next and
   *     gap-free batches regardless (cockroach.go:142-146);
   *   - effectively-once: already-accounted rounds replayed after a restart
-  *     are dropped by the guard, and append files only become visible via
-  *     the manifest committed with the watermark bump — the Spark analogue
-  *     of "txn tables can only be ahead but not behind" with tolerated
-  *     unique violations (cockroach.go:189-199);
+  *     are dropped by the guard, and a batch's files — appends and merged
+  *     state buckets alike — only become visible through the manifests
+  *     committed in the same record as the watermark bump, so a failed
+  *     batch leaves all nine tables as they were and its replay re-merges
+  *     against unchanged state — the Spark analogue of the reference's
+  *     one serializable transaction per block, with "txn tables can only
+  *     be ahead but not behind" and its tolerated unique violations
+  *     (cockroach.go:136-199);
   *   - steady-state small files: every `compactEvery` batches the append
   *     manifests are compacted (manifest swap, invisible to readers);
   *   - no watermark: blockchain rounds cannot be late (§2.H); the
@@ -45,7 +49,7 @@ object StreamIngest {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], batchId: Long) =>
         BlockIngest.applyBlocks(store, batch)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Seq("txn", "txn_participation", "block_header").foreach(t => store.compact(t))
+          TableStore.AppendTables.foreach(t => store.compact(t))
       }
       .start()
   }
@@ -69,7 +73,7 @@ object StreamIngest {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], batchId: Long) =>
         BlockIngest.applyBlocks(store, batch)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Seq("txn", "txn_participation", "block_header").foreach(t => store.compact(t))
+          TableStore.AppendTables.foreach(t => store.compact(t))
       }
       .start()
   }

@@ -171,4 +171,72 @@ class IngestSpec extends SparkSpec {
       graft.query.Api.AccountQueryOptions(includeDeleted = true))
     assert(all2.count() == 1)
   }
+
+  test("a batch that fails before its commit leaves all state untouched; its replay matches an uninterrupted run") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val first = blocksDs(
+      block(0, Vector(pay(A, B, 100)),
+        delta = LedgerDelta(
+          accounts = Vector(acctUpsert(A, 999900), acctUpsert(B, 100), acctUpsert(C, 5000)),
+          assetResources = Vector(AssetResourceRecord(addr = C, aidx = 1001,
+            paramsJson = Some("""{"an":"G"}"""), holding = Some(AssetHolding(BigInt(950), frozen = false)))),
+          appResources = Vector(AppResourceRecord(addr = B, aidx = 500,
+            paramsJson = Some("""{"gs":1}"""), localStateJson = Some("""{"n":1}"""))),
+          kvMods = Vector(KvMod(Codecs.boxKeyMake(500, "box".getBytes), Some("v1".getBytes))))),
+      block(1, Vector(pay(B, A, 7)), delta = LedgerDelta(accounts = Vector(acctUpsert(D, 7)))))
+    // touches all six state tables: updates, a close and a box delete
+    val second = blocksDs(
+      block(2, Vector(pay(A, C, 5)),
+        delta = LedgerDelta(
+          accounts = Vector(acctUpsert(A, 999895), acctDelete(D)),
+          assetResources = Vector(
+            AssetResourceRecord(addr = C, aidx = 1001, paramsJson = Some("""{"an":"H"}""")),
+            AssetResourceRecord(addr = A, aidx = 1001, holding = Some(AssetHolding(BigInt(5), frozen = true)))),
+          appResources = Vector(AppResourceRecord(addr = B, aidx = 500,
+            paramsJson = Some("""{"gs":2}"""), localStateJson = Some("""{"n":2}"""))),
+          kvMods = Vector(KvMod(Codecs.boxKeyMake(500, "box".getBytes), None)))))
+    val stateNames = (TableStore.Schemas.keySet -- TableStore.AppendTables).toSeq.sorted
+    def stateTables(s: TableStore) = stateNames
+      .map(t => t -> s.queryState(t, None).collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }.mkString("|")).sorted)
+
+    val store = newStore()
+    BlockIngest.initGenesis(store, Seq((A, 1000000L, "{}")), network = "graft-test")
+    BlockIngest.applyBlocks(store, first)
+    val (tablesBefore, metaBefore) = (stateTables(store), store.metastate)
+    assert(tablesBefore.forall(_._2.nonEmpty))
+    // the uninterrupted run starts from a copy of the pre-batch store
+    val twin = Paths.get(tmpDir("graft-store-twin"))
+    val from = Paths.get(store.root)
+    scala.util.Using.resource(Files.walk(from))(_.iterator().asScala.foreach { p =>
+      val dest = twin.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dest) else Files.copy(p, dest)
+    })
+    // The txn stage throws (its table dir is a regular file) while the
+    // six merges stage their buckets.
+    val txn = Paths.get(store.root, "txn")
+    val aside = Paths.get(store.root, "txn-aside")
+    Files.move(txn, aside, StandardCopyOption.ATOMIC_MOVE)
+    Files.writeString(txn, "not a directory")
+    intercept[Exception](BlockIngest.applyBlocks(store, second))
+    // the failure surfaced only after every merge had finished staging
+    assert(stateNames.forall { t =>
+      val s = Files.list(Paths.get(store.root, t))
+      try s.iterator().asScala.forall(!_.getFileName.toString.startsWith("_staging_")) finally s.close()
+    })
+    assert(stateTables(store) == tablesBefore)
+    assert(new TableStore(spark, store.root, nBuckets = 4).metastate == metaBefore)
+
+    Files.delete(txn)
+    Files.move(aside, txn, StandardCopyOption.ATOMIC_MOVE)
+    BlockIngest.applyBlocks(store, second)
+    val uninterrupted = new TableStore(spark, twin.toString, nBuckets = 4)
+    BlockIngest.applyBlocks(uninterrupted, second)
+    assert(store.nextRound == 3)
+    assert(stateTables(store) == stateTables(uninterrupted))
+    assert(stateTables(store) != tablesBefore)
+  }
 }

@@ -3,6 +3,7 @@ package graft.ingest
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Append tables: range-bucket layout + manifest commit. Readers resolve
   * files ONLY through the committed manifest — staged-but-uncommitted
@@ -171,43 +172,50 @@ class ManifestSpec extends SparkSpec {
     intercept[Throwable](store.readAsOf("block_header", vPin).collect())
   }
 
-  test("interrupted state-bucket swap recovers without losing pre-merge rows") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  test("state buckets read only manifest-listed files; the next write or vacuum deletes the rest") {
+    import java.nio.file.{Files, Path, Paths}
     import spark.implicits._
-    val store = new TableStore(spark, tmpDir("graft-swap"), nBuckets = 2)
+    val store = new TableStore(spark, tmpDir("graft-orphan"), nBuckets = 2)
     def assetDf(ids: Seq[Long]) = ids
       .map(i => (i, s"addr$i", "{}", false, 0L, Option.empty[Long]))
       .toDF("id", "creator_addr", "params", "deleted", "created_at", "closed_at")
       .select(TableStore.Schemas("asset").fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+    // A crash after staging, before the commit, leaves part files no
+    // manifest lists: here a copy of every committed file.
+    def plantOrphans(): Seq[Path] = store.manifest("asset").map { f =>
+      val src = Paths.get(s"${store.root}/asset/$f")
+      Files.copy(src, src.resolveSibling(s"orphan-${src.getFileName}"))
+    }
+    def bucketDirFiles(): Set[String] = listBkts(store).flatMap { d =>
+      val s = Files.list(d)
+      try s.iterator().asScala.map(p => s"${d.getFileName}/${p.getFileName}").toList finally s.close()
+    }.toSet
+
     store.writeStateBuckets("asset", "id", assetDf(0L until 10L), Seq(0, 1))
+    val orphans = plantOrphans()
     assert(store.readState("asset").count() == 10)
+    assert(store.readStateBuckets("asset", Seq(0, 1)).count() == 10)
+    assert((0L until 10L).forall(i => store.readStateKeyed("asset", i).filter(col("id") === i).count() == 1))
 
-    // Simulate a crash between the two renames of a swap: the live bkt dir
-    // was moved aside to _old_bkt=N, the replacement never arrived.
-    val live = listBkts(store).head
-    val old = Paths.get(live.getParent.toString, "_old_" + live.getFileName.toString)
-    Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    assert(store.readState("asset").count() == 10,
-      "recovery on read must restore the interrupted bucket")
-    assert(!Files.exists(old))
-
-    // Completed-swap leftover (crash after the second rename, before the
-    // cleanup delete): live dir present, _old twin still around — recovery
-    // must drop the twin, keeping the new face.
-    val live2 = listBkts(store).head
-    val old2 = Paths.get(live2.getParent.toString, "_old_" + live2.getFileName.toString)
-    // twin with DIFFERENT content so a wrong pick would change the count
-    Files.createDirectories(old2)
-    assert(store.readState("asset").count() == 10)
-    assert(!Files.exists(old2), "completed-swap leftover must be dropped")
-
-    // And the next merge-write over a crash leftover still lands cleanly.
+    // the next write to the buckets sweeps the orphans and its retired files
     store.writeStateBuckets("asset", "id", assetDf(0L until 4L), Seq(0, 1))
+    assert(orphans.forall(!Files.exists(_)))
     assert(store.readState("asset").count() == 4)
+    assert(bucketDirFiles() == store.manifest("asset").toSet)
+
+    // vacuum sweeps them too, and leaves the committed files
+    val more = plantOrphans()
+    store.vacuum("asset")
+    assert(more.forall(!Files.exists(_)))
+    assert(store.readState("asset").count() == 4)
+
+    // an emptied bucket commits an empty list
+    store.writeStateBuckets("asset", "id", assetDf(Nil), Seq(0, 1))
+    assert(store.manifest("asset").isEmpty && store.readState("asset").count() == 0)
+    assert(listBkts(store).isEmpty)
   }
 
   private def listBkts(store: TableStore) = {
-    import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"${store.root}/asset"))
     try s.iterator().asScala.toList.filter(_.getFileName.toString.startsWith("bkt="))
     finally s.close()

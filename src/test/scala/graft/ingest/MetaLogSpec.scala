@@ -185,7 +185,7 @@ class MetaLogSpec extends SparkSpec {
     assert(reopened.read("txn").count() > txnCount)
   }
 
-  test("readOnly store refuses mutation and does not heal on read") {
+  test("readOnly store refuses mutation and leaves uncommitted files in place") {
     val root = tmpDir("store")
     val rw = new TableStore(spark, root)
     rw.putMetastate("x" -> "1")
@@ -193,13 +193,17 @@ class MetaLogSpec extends SparkSpec {
     assert(ro.metastate("x") == "1")
     intercept[IllegalStateException](ro.putMetastate("x" -> "2"))
     intercept[IllegalStateException](ro.stageAppend("txn", rw.read("txn")))
-    // a crash leftover `_old_bkt=0` stays untouched by a read-only read
-    val leftover = Paths.get(root, "account", "_old_bkt=0")
-    Files.createDirectories(leftover)
-    ro.read("account").count()
-    assert(Files.exists(leftover), "read-only read must not move directories")
-    // the writer's read path heals it (live dir missing -> restore)
-    rw.read("account").count()
-    assert(!Files.exists(leftover) || Files.exists(Paths.get(root, "account", "bkt=0")))
+    // a writer's uncommitted part file in a state bucket (not even valid
+    // parquet): never read, and a read-only store neither reads nor
+    // deletes it
+    val orphan = Paths.get(root, "account", "bkt=0", "part-orphan.parquet")
+    Files.createDirectories(orphan.getParent)
+    Files.writeString(orphan, "uncommitted")
+    assert(ro.read("account").count() == 0 && ro.queryState("account", None).count() == 0)
+    intercept[IllegalStateException](ro.vacuum("account"))
+    assert(Files.exists(orphan), "read-only store must not delete files")
+    // the writer's vacuum deletes it
+    rw.vacuum("account")
+    assert(!Files.exists(orphan))
   }
 }

@@ -171,16 +171,22 @@ class LocalReadSpec extends SparkSpec {
     }
   }
 
-  test("a crash-left _old_bkt=N is healed before the local state read") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  test("an uncommitted part file in a state bucket is invisible to the local state read") {
+    import java.nio.file.{Files, Paths}
+    val b = store.bucketOfValue(A)
     val expected = store.readState("account").filter(s"addr = '$A'").head().getAs[Long]("microalgos")
-    val dir = Paths.get(s"${store.root}/account/bkt=${store.bucketOfValue(A)}")
-    val old = Paths.get(s"${store.root}/account/_old_bkt=${store.bucketOfValue(A)}")
-    Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE) // crash between the two renames
-    val (df, _) = Api.accounts(store, Api.AccountQueryOptions(equalToAddress = Some(A)))
-    assert(LocalScan.isLocal(df))
-    val rows = df.collect()
-    assert(rows.length == 1 && rows.head.getAs[Long]("microalgos") == expected)
-    assert(Files.exists(dir) && !Files.exists(old))
+    // a crash after staging, before the commit: copies of the bucket's files
+    val orphans = store.manifest("account").filter(_.startsWith(s"bkt=$b/")).map { f =>
+      val src = Paths.get(s"${store.root}/account/$f")
+      Files.copy(src, src.resolveSibling(s"orphan-${src.getFileName}"))
+    }
+    try {
+      assert(orphans.nonEmpty)
+      val (df, _) = Api.accounts(store, Api.AccountQueryOptions(equalToAddress = Some(A)))
+      assert(LocalScan.isLocal(df))
+      val rows = df.collect()
+      assert(rows.length == 1 && rows.head.getAs[Long]("microalgos") == expected)
+      assert(store.readState("account").filter(s"addr = '$A'").count() == 1)
+    } finally orphans.foreach(Files.delete)
   }
 }
