@@ -172,7 +172,7 @@ class ManifestSpec extends SparkSpec {
     intercept[Throwable](store.readAsOf("block_header", vPin).collect())
   }
 
-  test("state buckets read only manifest-listed files; the next write or vacuum deletes the rest") {
+  test("unlisted state-bucket files stay unread; a write or vacuum sweeps them") {
     import java.nio.file.{Files, Path, Paths}
     import spark.implicits._
     val store = new TableStore(spark, tmpDir("graft-orphan"), nBuckets = 2)

@@ -171,7 +171,7 @@ class LocalReadSpec extends SparkSpec {
     }
   }
 
-  test("an uncommitted part file in a state bucket is invisible to the local state read") {
+  test("an uncommitted state-bucket part file is invisible to the local read") {
     import java.nio.file.{Files, Paths}
     val b = store.bucketOfValue(A)
     val expected = store.readState("account").filter(s"addr = '$A'").head().getAs[Long]("microalgos")
