@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every registered query on SPARK_GRAFT_SF_DIR,
   * one JSON result line on stdout (the contract).
@@ -24,24 +23,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Bench.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Generated-class cache (static conf, default 100 entries): the
-      // multi-plan queries (streaming verticals run ~20 distinct plans
-      // per micro-batch; iterative loops a handful per round) evict and
-      // recompile their own codegen output mid-query at the default
-      // size. 300 holds one query's plan set without measurable JIT
-      // code-cache pressure (5000 measurably degraded later queries).
-      // Scale-neutral: this is driver-side planning cost, identical on
-      // a cluster. Parameterized like the core count.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "300"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Generated-class cache (static conf, default 100 entries): the
+    // multi-plan queries (streaming verticals run ~20 distinct plans
+    // per micro-batch; iterative loops a handful per round) evict and
+    // recompile their own codegen output mid-query at the default
+    // size. 300 holds one query's plan set without measurable JIT
+    // code-cache pressure (5000 measurably degraded later queries).
+    // Scale-neutral: this is driver-side planning cost, identical on
+    // a cluster. Parameterized like the core count.
+    val spark = GraftSession.local(cpus, "spark.sql.codegen.cache.maxEntries" ->
+      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "300"))
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: spin up codegen, parquet footer reads, scheduler pools, and

@@ -5,7 +5,6 @@ import graft.ingest.{BlockIngest, TableStore}
 import graft.model._
 import graft.query.Api
 import graft.streaming.StreamIngest
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Executable tour of the engine's full vertical (SURVEY.md §7.2):
@@ -14,12 +13,7 @@ import java.nio.file.{Files, Paths}
   */
 object EngineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.codec.Codecs

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,13 +15,7 @@ object Verify {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = Bench.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(Bench.cpus())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Queries are independent and write disjoint dirs — run them through a

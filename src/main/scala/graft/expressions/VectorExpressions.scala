@@ -288,7 +288,7 @@ private[expressions] object CentroidMath {
   * `branches` nearest coarse cells — O((C + branches·nlist/C)·dims) per
   * row instead of the flat argmax's O(nlist·dims), the difference
   * between 900 and tens of thousands of rows/s/core at nlist=16384
-  * (RecallProbe `assign` sweep; PLANS.md).
+  * (PLANS.md, "Two-level IVF assignment").
   *
   * The trade is the standard coarse-quantizer approximation (IMI /
   * IVF-ADC family): a vector near a coarse-cell boundary may assign to a

@@ -20,7 +20,8 @@ import scala.util.Using
   *   - a COMMIT appends ONE record holding only the batch's delta —
   *     `set` (replace a key) and `app` (append lines to a key) ops — via
   *     write-tmp + atomic rename, so commit cost is O(batch), flat in
-  *     history (measured by `graft.tools.MetaLogProbe`);
+  *     history (measured at 6000 commits; PLANS.md, "Append-only
+  *     metadata log");
   *   - every `checkpointInterval` records the full materialized KV map is
   *     written as `<v>.checkpoint.json` and the log tail before the
   *     PREVIOUS checkpoint is dropped, bounding both replay length and

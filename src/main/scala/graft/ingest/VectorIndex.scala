@@ -295,8 +295,9 @@ object VectorIndex {
   /** `coarseBranches > 0` escalates cell assignment to the two-level
     * coarse form (C = ⌈√nlist⌉ cells, searching that many branches) —
     * required once nlist reaches 10⁴–10⁵, where the flat per-row argmax
-    * is the append bottleneck (RecallProbe: 900 rows/s at nlist=16384 vs
-    * 48k at 256). The mode is RECORDED in the segment's registry line,
+    * is the append bottleneck (900 rows/s at nlist=16384 vs 48k at 256;
+    * PLANS.md, "Two-level IVF assignment"). The mode is RECORDED in the
+    * segment's registry line,
     * and [[ivfSegmentsTopKBatch]] probes each segment with the same
     * geometry that encoded it, so mixed-mode unions stay consistent.
     * `coarseBranches = ⌈√nlist⌉` searches every branch — bit-identical

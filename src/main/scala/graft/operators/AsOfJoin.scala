@@ -95,8 +95,9 @@ object AsOfJoin {
 
   /** Hot-key form of [[asofJoinLeft]] — identical semantics, different
     * cost envelope. The plain form windows per KEY, so one hot key (80%
-    * of rows on a single key measured 12× task skew and 4.6× wall in
-    * AsOfSkewProbe) serializes into one task. This variant pre-splits
+    * of rows on a single key measured 12× task skew and 4.6× wall;
+    * PLANS.md, "As-of join hot-key skew") serializes into one task.
+    * This variant pre-splits
     * every key into coarse TIME SLICES of `sliceWidth` (times must be
     * numeric — unix micros upstream for timestamps):
     *

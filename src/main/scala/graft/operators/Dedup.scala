@@ -389,9 +389,9 @@ object Dedup {
     // union-find beats the distributed loop: each distributed round pays
     // whole-stage codegen compilation for three fresh plans plus two
     // joins over the edge frame, while union-find is linear scans.
-    // ConnectedComponentsProbe (PLANS.md) measures the driver path ahead
-    // at every size to ≥10M edges (14.7s vs 54.0s at 10M, chained
-    // families), so the 4M default is a driver-MEMORY guardrail (collect
+    // PLANS.md ("Connected components at 10M edges") measures the driver
+    // path ahead at every size to ≥10M edges (14.7s vs 54.0s at 10M,
+    // chained families), so the 4M default is a driver-MEMORY guardrail (collect
     // + label map), not a speed crossover — raise it when the driver has
     // headroom. The distributed path remains the correctness-equivalent
     // arbitrarily-large-graph fallback (spec-pinned against the same
@@ -943,9 +943,9 @@ object Dedup {
         .cast("long").as("jac_permille"))
   }
 
-  // hotDf default measured by PrefixSkewProbe on the ×10-replicated
-  // corpus: 65536 left every rep token cold (maxTask/p95 2.6, 101 s);
-  // 4096 flattened it (1.01, 45 s, identical pairs) and holds par on
+  // hotDf default measured on the ×10-replicated corpus (PLANS.md,
+  // "hotDf calibration"): 65536 left every rep token cold (maxTask/p95
+  // 2.6, 101 s); 4096 flattened it (1.01, 45 s, identical pairs) and holds par on
   // the unreplicated corpus; 1024 over-salts (moderate-df tokens pay
   // the 32× a-side replication without the df² mass to amortize it).
   def prefixFilterPairs(df: DataFrame, idCol: String, tokensCol: String,
@@ -1139,8 +1139,9 @@ object Dedup {
     * ordering vs a fresh-df recomputation over the same sets.
     * One row: `(stored_sets, stored_candidate_mass,
     * fresh_candidate_mass, drift_permille)` with drift 1000 ⇒ the
-    * orderings agree; probe-measured guidance (PrefixDriftProbe,
-    * PLANS.md): rebuild at drift ≥ ~1500, where the stored probe's
+    * orderings agree; measured guidance (PLANS.md, "Prefix-index
+    * staleness telemetry"): rebuild at drift ≥ ~1500, where the stored
+    * probe's
     * candidate join pays ≥ 1.5× the fresh plan's. Cost: one pass over
     * the stored sets + prefixes — run it at maintenance cadence, not
     * per batch. */

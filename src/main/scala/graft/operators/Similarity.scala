@@ -188,7 +188,8 @@ object Similarity {
     * axis-symmetric embedding distributions). A SKEWED real-world
     * distribution (boilerplate mass in one region) concentrates a large
     * corpus fraction into one orthant; the bounded collect absorbs that
-    * at recall cost (SkewedAnnProbe: 80%-hot corpus stays balanced and
+    * at recall cost (PLANS.md, "Skewed-embedding ANN": an 80%-hot corpus
+    * stays balanced and
     * memory-capped, truncation counted) — prefer
     * [[semanticNearDupPairs]] there, whose IVF cells follow the
     * distribution instead of fixed axes. */
@@ -682,8 +683,9 @@ object Similarity {
     * two-level coarse index (C = ⌈√nlist⌉ cells, searching that many
     * branches) — the required shape once nlist reaches the 10⁴–10⁵ a
     * billion-vector deployment wants, where the flat per-row argmax is
-    * the scan bottleneck (RecallProbe `assign`: 900 rows/s at
-    * nlist=16384 vs 48k at 256). Both sides share one index, so the
+    * the scan bottleneck (900 rows/s at nlist=16384 vs 48k at 256;
+    * PLANS.md, "Two-level IVF assignment"). Both sides share one index,
+    * so the
     * search stays internally consistent (see
     * [[graft.expressions.TwoLevelNearestCentroids]]). */
   /** `pqCodebooks` switches within-cluster scoring to the PQ/ADC tier

@@ -484,8 +484,8 @@ object TextOps {
     * free): grams with df ≥ `hotDf` resolve through a broadcast join
     * map-side and never enter any exchange — their positions are
     * cross-doc-covered by definition — while the cold shuffle join has
-    * every key < `hotDf` rows by construction. Measured in
-    * [[graft.tools.GramSkewProbe]] (one gram in 80% of 4M docs):
+    * every key < `hotDf` rows by construction. Measured (PLANS.md,
+    * "Round 7: hot-gram fix implemented"; one gram in 80% of 4M docs):
     * max-task record skew 5.9× (window) / 3.5× (plain join back, which
     * AQE can NOT split — OptimizeSkewedJoin doesn't match through the
     * aggregate+filter under the join) / 1.0× (this split). The

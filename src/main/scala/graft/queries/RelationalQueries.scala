@@ -1163,7 +1163,8 @@ object RelationalQueries {
     //    range-dim order date (the cluster-by-(hash(user), day) shape).
     //    Sorting by zval makes parquet row-group min/max tight on BOTH
     //    dimensions, so a 2-D range predicate prunes groups a one-column
-    //    sort cannot (tools/ZOrderProbe measures the actual skip). Pure
+    //    sort cannot (PLANS.md, "Z-order layout, measured", has the
+    //    actual skip). Pure
     //    shift-and-or expression tree, bit-identical in DuckDB. ──
     QueryDef.sql(
       "e8_zorder_layout",

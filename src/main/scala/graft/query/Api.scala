@@ -153,10 +153,10 @@ object Api {
   // parsed struct — the plan carries exactly one from_json however many
   // predicates stack. (Projecting the struct as a column does NOT work:
   // predicate pushdown re-inlines the alias per field reference — six
-  // from_json copies for five predicates, measured in
-  // tools/JsonParseProbe.) Every schema leaf is STRING, so values coerce
-  // exactly like get_json_object (numbers → literal text, objects → JSON
-  // text; parity pinned by the same probe) and the original casts apply
+  // from_json copies for five predicates; PLANS.md, "One from_json per
+  // txn row".) Every schema leaf is STRING, so values coerce exactly like
+  // get_json_object (numbers → literal text, objects → JSON text; parity
+  // checked in the same record) and the original casts apply
   // unchanged on top.
 
   private val BodySchema = StructType(Seq(

@@ -20,8 +20,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     one serializable transaction per block, with "txn tables can only
   *     be ahead but not behind" and its tolerated unique violations
   *     (cockroach.go:136-199);
-  *   - steady-state small files: every `compactEvery` batches the append
-  *     manifests are compacted (manifest swap, invisible to readers);
+  *   - steady-state small files: every batch's applyBlocks runs
+  *     `TableStore.compactSealed`, which merges the file sets of sealed
+  *     (no longer written) round buckets by a manifest swap, invisible to
+  *     readers, and leaves the physical delete to `vacuum`, so files a
+  *     concurrent snapshot may still scan stay on disk;
   *   - no watermark: blockchain rounds cannot be late (§2.H); the
   *     watermark IS the metastate next-round counter, bumped as the last
   *     step of each batch (the single commit point);
@@ -31,49 +34,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamIngest {
 
   /** Start the ingest stream. `inDir` receives one JSON file per round
-    * (graft.codec.BlockCodec.blockToJson). */
+    * (graft.codec.BlockCodec.blockToJson). The default trigger drains the
+    * files present and stops; a live follower passes
+    * `Trigger.ProcessingTime(ms)` to keep picking up new rounds. */
   def start(
       spark: SparkSession,
       store: TableStore,
       inDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 64,
-      compactEvery: Int = 32): StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .textFile(inDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], batchId: Long) =>
+      .trigger(trigger)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], _: Long) =>
         BlockIngest.applyBlocks(store, batch)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          TableStore.AppendTables.foreach(t => store.compact(t))
-      }
-      .start()
-  }
-
-  /** Continuous variant for a live follower (same pipeline, processing-time
-    * trigger). */
-  def startContinuous(
-      spark: SparkSession,
-      store: TableStore,
-      inDir: String,
-      checkpointDir: String,
-      intervalMs: Long = 1000L,
-      compactEvery: Int = 32): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream
-      .option("maxFilesPerTrigger", 64)
-      .textFile(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], batchId: Long) =>
-        BlockIngest.applyBlocks(store, batch)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          TableStore.AppendTables.foreach(t => store.compact(t))
       }
       .start()
   }

@@ -740,7 +740,8 @@ object StreamingCrawl {
     * would find its own keys in the base and flip its admissions to
     * duplicates.
     *
-    * CADENCE (measured, `tools/LedgerCadenceProbe`, 48 batches ×2k
+    * CADENCE (measured; PLANS.md, "Ledger compaction cadence probe"; 48
+    * batches ×2k
     * rows, clean host): never-compacting reads 2.96 s/batch steady
     * and climbing (every ledger read lists + scans all live
     * partitions; seen is read 2-3× per batch), compact-every-8 reads

@@ -30,7 +30,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     equals Jaccard over grams up to md5 collisions).
   *
   * Per-batch work is O(batch) hashing plus a column-pruned scan of the
-  * index (IncrementalDedupProbe measures the batch-vs-rescan gap).
+  * index (PLANS.md, "Incremental-dedup scale probe", measures the
+  * batch-vs-rescan gap).
   *
   * Replay safety: both tables are partitioned by `batch=<batchId>` and
   * written with dynamic partition overwrite, so a replayed micro-batch

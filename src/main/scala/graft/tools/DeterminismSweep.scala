@@ -19,13 +19,7 @@ object DeterminismSweep {
     val pB = args.lift(2).getOrElse("7")
 
     def runAll(partitions: String): Map[String, Seq[String]] = {
-      val spark = SparkSession.builder()
-        .master(s"local[$partitions]")
-        .config("spark.sql.shuffle.partitions", partitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.GraftSession.local(partitions.toInt)
       spark.sparkContext.setLogLevel("ERROR")
       val out = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val rows =

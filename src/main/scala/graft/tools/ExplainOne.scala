@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of registered queries — the
   * plan-audit loop ("is there a shuffle here that shouldn't be, did
   * the filter reach the scan, how wide are the codegen spans") without
@@ -16,10 +14,7 @@ object ExplainOne {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val unknown = names.toSet -- graft.SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"━━━ $n ━━━")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: run one registered query repeatedly, print
   * per-iteration wall time and (optionally) the formatted physical plan.
   *
@@ -17,19 +15,10 @@ object Profile {
     // core count via the bench's own env knob (and default) so
     // anti-scaling can be attributed in one tool
     val cpus = graft.Bench.cpus()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        builder.config(kv.substring(0, i), kv.substring(i + 1))
-      })
-    val spark = builder.getOrCreate()
+    val extra = sys.env.get("GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(';')).filter(_.contains('='))
+      .map { kv => val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1) }
+    val spark = graft.GraftSession.local(cpus, extra: _*)
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated names profile several queries in ONE JVM (same
     // warmup discipline per query; A/B within one sitting)

@@ -6,12 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all Spark-backed suites (one JVM per sbt test
   * fork; building a session per suite would dominate test time). */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
