@@ -47,6 +47,8 @@ if __name__ == "__main__":
     outdir, sfdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     res = compare(outdir, sfdir, only)
-    bad = {k: v for k, v in res.items() if not v.startswith("OK") and not v.startswith("no_oracle(sortable)")}
-    print(f"{len(res)} compared, {len(bad)} problems")
+    ok = sum(v == "OK" for v in res.values())
+    rows_only = sum(v == "no_oracle(sortable)" for v in res.values())
+    bad = {k: v for k, v in res.items() if v not in ("OK", "no_oracle(sortable)")}
+    print(f"{len(res)} compared: {ok} hash-match, {rows_only} rows-only, {len(bad)} problems")
     for k, v in bad.items(): print(" ", k, "->", v[:300])

@@ -33,7 +33,6 @@ object Bench {
     // a cluster. Parameterized like the core count.
     val spark = GraftSession.local(cpus, "spark.sql.codegen.cache.maxEntries" ->
       sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "300"))
-    spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: spin up codegen, parquet footer reads, scheduler pools, and
     // the one-time init of collation-aware string predicates (first use of

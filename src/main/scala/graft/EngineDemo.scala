@@ -14,7 +14,6 @@ import java.nio.file.{Files, Paths}
 object EngineDemo {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(4)
-    spark.sparkContext.setLogLevel("WARN")
 
     import graft.codec.Codecs
     def addr(i: Int) = Codecs.addressEncode(Array.fill(32)(i.toByte))
@@ -67,7 +66,7 @@ object EngineDemo {
     //    files are listed (d.i.y. database index for a random key).
     val someTxid = store.read("txn").filter(org.apache.spark.sql.functions.col("txid").isNotNull)
       .select("txid").head().getString(0)
-    val candFiles = store.txidCandidateFiles(someTxid)
+    val candFiles = store.bloomCandidateFiles("txn", "txid", someTxid)
     val (byTxid, _) = Api.transactions(store, Api.TransactionFilter(txid = Some(someTxid)))
     println(s"txid lookup: ${byTxid.count()} row via ${candFiles.size} of " +
       s"${store.manifest("txn").size} committed files")

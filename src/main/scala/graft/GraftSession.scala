@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** `local[cpus]` with one shuffle partition per core, the `UTC` session
-    * time zone every query's results depend on, and the UI off. `conf`
-    * adds further settings; static ones (e.g.
+    * time zone every query's results depend on, the UI off and the log
+    * level at WARN. `conf` adds further settings; static ones (e.g.
     * `spark.sql.codegen.cache.maxEntries`) only take effect when no session
     * exists yet. */
   def local(cpus: Int, conf: (String, String)*): SparkSession = {
@@ -18,6 +18,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     conf.foreach { case (k, v) => builder.config(k, v) }
-    builder.getOrCreate()
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -16,7 +16,6 @@ object Verify {
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     val spark = GraftSession.local(Bench.cpus())
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Queries are independent and write disjoint dirs — run them through a
     // small pool so the correctness gate's wall time doesn't grow linearly

@@ -7,34 +7,24 @@ import graft.transform.{BlockTransforms, DeltaTransforms}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.{ExecutionContext, Future}
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 /** Batch apply of a micro-batch of blocks (SURVEY.md §3.1's Spark
   * equivalent): ordering guard against metastate, staged append of
   * txn/participation/header by round range, six staged state merges, and
-  * one metadata-log record that publishes all of them with the watermark.
-  * Structured Streaming wraps this in foreachBatch
-  * (graft.streaming.StreamIngest); the reference's serializable transaction
-  * + tolerated unique violations (cockroach.go:136-199) become staged files
-  * + that single driver-side commit point.
+  * one [[TableStore.commit]] that publishes all of them with the watermark
+  * in one metadata-log record. Structured Streaming wraps this in
+  * foreachBatch (graft.streaming.StreamIngest); the reference's
+  * serializable transaction + tolerated unique violations
+  * (cockroach.go:136-199) become staged files + that single driver-side
+  * commit point.
   *
   * Input is one JSON document per block (graft.codec.BlockCodec), parsed in
   * the executors — the recursive inner-txn tree never needs a Spark schema.
   */
 object BlockIngest {
-
-  /** Pool for intra-batch write parallelism (9 independent table writes).
-    * Bounded and shared: one pool regardless of how many stores exist. */
-  private lazy val ingestPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(9, r => {
-        val t = new Thread(r, "graft-ingest")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Strict-ordering guard (cockroach.go:142-146): rounds already accounted
     * are dropped (idempotent replay); the remainder must start at
@@ -141,54 +131,35 @@ object BlockIngest {
       // state-upsert batch (cockroach.go:167-199). Same here: each append
       // and each merge targets a distinct table directory, so they are
       // independent Spark jobs — run them from a thread pool and let the
-      // scheduler interleave stages. The metastate record below stays the
-      // single serial commit point.
-      implicit val ec: ExecutionContext = BlockIngest.ingestPool
+      // scheduler interleave stages. The commit below stays the single
+      // serial commit point.
+      implicit val ec: ExecutionContext = TableStore.ingestPool
 
       // Every write STAGES its files (invisible to readers): appends
-      // report their file lists, merges the `set` kvs listing each
-      // touched bucket's new files.
+      // report their file lists, merges each touched bucket's new files.
       val appendWrites: Seq[Future[(String, Seq[String])]] = Seq(
         Future("txn" -> store.stageAppend("txn", conform(deltaDf(BlockTransforms.flattenBlock), "txn"))),
         Future("txn_participation" -> store.stageAppend("txn_participation",
           conform(deltaDf(BlockTransforms.participationRows), "txn_participation"))),
         Future("block_header" -> store.stageAppend("block_header",
           conform(deltaDf(b => Seq(BlockTransforms.headerRow(b))), "block_header"))))
-      val mergeWrites: Seq[Future[Seq[(String, String)]]] = mergeDefs.flatMap { d =>
-        touchedAll.get(d.table).map(touched => Future(merge(store, d, d.deltas(spark, blocks), touched)))
+      val mergeWrites: Seq[Future[(String, Map[Int, Seq[String]])]] = mergeDefs.flatMap { d =>
+        touchedAll.get(d.table).map(touched =>
+          Future(d.table -> merge(store, d, d.deltas(spark, blocks), touched)))
       }
-      val (appendDone, mergeDone) = (settle(appendWrites), settle(mergeWrites))
+      val (appendDone, mergeDone) = (TableStore.settle(appendWrites), TableStore.settle(mergeWrites))
       val staged = appendDone.map(_.get)
-      val stateSets = mergeDone.flatMap(_.get)
+      val merged = mergeDone.map(_.get)
 
-      // B7 + watermark bump + manifest publication for all nine tables —
-      // ONE metadata log record is the single commit point of the
-      // micro-batch: a failure before this line leaves only orphan files
-      // readers never resolve, and every table as it was. The record
-      // carries ONLY the batch's delta (append ops for the staged append
-      // files' manifest + index lines, set ops for the touched state
-      // buckets' file lists and the scalars) — commit cost is O(batch),
-      // flat in chain history (MetaLog).
-      val manifestAppends = staged.collect { case (t, files) if files.nonEmpty =>
-        store.manifestKey(t) -> files.mkString("\n")
-      }
-      // Per-file indexes (round min/max stats on every append table;
-      // key blooms on txn.txid and txn_participation.addr) over the
-      // batch's staged files, folded into the same commit — the index
-      // can never disagree with the manifest it serves (see FileBloom).
-      // One index-build Spark job per table; independent, so they run
-      // concurrently like the writes above (the scheduler interleaves
-      // them across the same cores — measured ~2× off the commit phase).
-      val indexAppends = settle(staged.map { case (t, files) =>
-        Future(store.indexAppendKvs(t, files))
-      }).flatMap(_.get)
-      store.commitMetastate(
-        sets = stateSets ++ Seq(
-          TableStore.MetaSpecialAccounts -> specialAccounts,
-          TableStore.MetaNextRound -> (lastRound + 1).toString),
-        appends = manifestAppends ++ indexAppends)
-      // The commit retired the touched buckets' old files: delete them.
-      touchedAll.foreach { case (t, buckets) => store.sweepStateBuckets(t, buckets) }
+      // B7 + watermark bump + publication of all nine tables — ONE commit
+      // is the single commit point of the micro-batch: a failure before it
+      // leaves only orphan files readers never resolve, and every table as
+      // it was. It builds the staged files' per-file indexes (one job per
+      // table, concurrently), appends O(batch) to the metadata log, and
+      // sweeps the touched buckets' retired files.
+      store.commit(staged = staged, buckets = merged, sets = Seq(
+        TableStore.MetaSpecialAccounts -> specialAccounts,
+        TableStore.MetaNextRound -> (lastRound + 1).toString))
 
       // Compaction cadence: once a range bucket is SEALED (the watermark
       // moved past it), fold its per-batch file-sets into one — at most
@@ -216,7 +187,8 @@ object BlockIngest {
     }
 
   /** A2: genesis loader (cockroach.go:213-280) — seed `account` (one row
-    * per allocation, created_at = 0), record network, import state = 0. */
+    * per allocation, created_at = 0), record network, import state = 0,
+    * all in one commit. */
   def initGenesis(
       store: TableStore,
       allocations: Seq[(String, Long, String)], // (addr, microalgos, accountDataJson)
@@ -227,26 +199,18 @@ object BlockIngest {
       AccountRow(addr, algos, 0, 0, deleted = false, created_at = 0,
         closed_at = None, keytype = None, account_data = Some(data))
     }
-    // fresh table, nothing read — no lineage hazard, write directly
-    val accountDf = conform(rows.toDF(), "account")
-    val touched = (0 until store.nBuckets).toSeq
-    store.writeStateBuckets("account", "addr", accountDf, touched)
+    val accounts = store.writeStateBucketsStaged("account", "addr",
+      conform(rows.toDF(), "account"), 0 until store.nBuckets)
     // Seed migration state alongside network, as the reference does at
     // genesis (cockroach.go:226-232): next = MaxInt ⇒ no migration needed.
-    store.putMetastate(
+    store.commit(buckets = Seq("account" -> accounts), sets = Seq(
       TableStore.MetaNetwork -> network,
       TableStore.MetaMigration -> CanonicalJson.render(
-        CanonicalJson.JObj.of("next" -> CanonicalJson.JInt(Long.MaxValue))))
-    store.setNextRound(0L)
+        CanonicalJson.JObj.of("next" -> CanonicalJson.JInt(Long.MaxValue))),
+      TableStore.MetaNextRound -> "0"))
   }
 
   // ── helpers ─────────────────────────────────────────────────────────
-
-  /** Every future's outcome, after ALL of them finished: a failed batch
-    * rethrows only once no sibling write is still running, so a retry of
-    * the batch cannot race its own stale writes. */
-  private def settle[T](fs: Seq[Future[T]]): Seq[scala.util.Try[T]] =
-    fs.map(f => Await.ready(f, Duration.Inf).value.get)
 
   /** Cast to the authoritative table schema (case classes encode e.g.
     * BigDecimal as Decimal(38,18), the table stores Decimal(20,0)). */
@@ -258,9 +222,9 @@ object BlockIngest {
   // Read the touched buckets, merge (one keyed aggregate), stage the
   // result under new file names — the files read stay untouched, which
   // severs the read-own-write hazard without a materialization job.
-  // Returns the buckets' manifest kvs for the batch's commit.
+  // Returns each touched bucket's new files for the batch's commit.
   private def merge(store: TableStore, d: MergeDef, deltas: DataFrame,
-                    touched: Seq[Int]): Seq[(String, String)] = {
+                    touched: Seq[Int]): Map[Int, Seq[String]] = {
     val state = store.readStateBuckets(d.table, touched)
     val merged =
       if (d.hard) StateMerge.mergeHardDelete(state, deltas, d.keys, d.payload)

@@ -42,14 +42,11 @@ import scala.util.Using
   * `{"app": {key: lines…}, "set": {key: value…}}` — `set` replaces the
   * key, `app` appends `"\n" + lines` (manifests and per-file index maps
   * are newline-joined, so appending a batch's files is string append).
-  * A retired pre-log `metastate.json` in the parent dir is honored as the
-  * version "-1" base state, making old store directories readable as-is.
   */
 final class MetaLog(rootDir: String, val checkpointInterval: Int = 64) {
   import CanonicalJson._
 
   private val dir = Paths.get(rootDir, "_meta")
-  private val legacyPath = Paths.get(rootDir, "metastate.json")
 
   // (version, materialized state); MinValue = never loaded
   @volatile private var cache: (Long, Map[String, String]) = (Long.MinValue, Map.empty)
@@ -95,49 +92,19 @@ final class MetaLog(rootDir: String, val checkpointInterval: Int = 64) {
     }
 
   /** The materialized KV state AS OF `version` — the time-travel read
-    * path: nearest checkpoint at/below `version`, then tail replay up to
-    * it. History is bounded by checkpoint retention (records at/below the
-    * previous checkpoint are trimmed), so a version older than that
-    * horizon throws rather than silently answering from the wrong state.
-    * Physical data files referenced by an old state stay readable until
-    * an explicit `vacuum` — the standard snapshot-vs-vacuum contract. */
+    * path ([[replay]]). History is bounded by checkpoint retention
+    * (records at/below the previous checkpoint are trimmed), so a version
+    * older than that horizon throws rather than silently answering from
+    * the wrong state. Physical data files referenced by an old state stay
+    * readable until an explicit `vacuum` — the standard snapshot-vs-vacuum
+    * contract. */
   def stateAt(version: Long): Map[String, String] = {
     val (recs, cps) = listEntries()
     val head = (recs.keySet ++ cps.keySet).foldLeft(-1L)(math.max)
     if (version > head) throw new IllegalArgumentException(
       s"version $version is beyond the log head $head")
-    // -1 is the ONE legacy pre-log version; any other negative is a
-    // caller bug, not a request for the base state.
-    if (version < -1) throw new IllegalArgumentException(
-      s"version $version is not a log version (the legacy base is -1)")
-    if (version == -1)
-      return if (Files.exists(legacyPath)) parseObjFile(legacyPath) else Map.empty
-    val baseV = cps.keySet.filter(_ <= version).maxOption
-    var st: Map[String, String] = baseV match {
-      case Some(v) => parseObjFile(cps(v))
-      case None =>
-        if (Files.exists(legacyPath)) parseObjFile(legacyPath)
-        else Map.empty[String, String]
-    }
-    (baseV.getOrElse(-1L) + 1 to version).foreach { v =>
-      recs.get(v) match {
-        case Some(p) =>
-          // A concurrent writer's checkpoint trim can delete the record
-          // BETWEEN our listing and this read — same retention-horizon
-          // condition as a missing listing, same error.
-          st =
-            try applyRecordFile(st, p)
-            catch {
-              case e: java.nio.file.NoSuchFileException =>
-                throw new IllegalStateException(
-                  s"version $version is older than the retention horizon " +
-                    s"(record $v trimmed by checkpointing during the read)", e)
-            }
-        case None => throw new IllegalStateException(
-          s"version $version is older than the retention horizon (record $v trimmed by checkpointing)")
-      }
-    }
-    st
+    if (version < 0) throw new IllegalArgumentException(s"version $version is not a log version")
+    replay(recs, cps, version)._2
   }
 
   // ── internals ───────────────────────────────────────────────────────
@@ -176,44 +143,36 @@ final class MetaLog(rootDir: String, val checkpointInterval: Int = 64) {
     applyOps(st, ops("set"), ops("app"))
   }
 
-  /** Bring `cache` to the on-disk head: no-op if the version matches,
-    * incremental tail replay if only new records appeared, full
-    * checkpoint + tail replay otherwise (first load / other-writer
-    * checkpoint cleanup). */
+  /** The state at `version`: from `from` (a state this instance already
+    * materialized, at or below `version`) when every record after it is
+    * still on disk, else from the newest checkpoint at or below `version`;
+    * then every record after that base up to `version`. A record missing
+    * from that run was trimmed by checkpointing (possibly between the
+    * listing and the read: `version` is past the retention horizon) or the
+    * `_meta` dir is corrupt; either way the state is not guessed. */
+  private def replay(recs: Map[Long, Path], cps: Map[Long, Path], version: Long,
+                     from: (Long, Map[String, String]) = (-1L, Map.empty)): (Long, Map[String, String]) = {
+    val warm = from._1 >= 0 && from._1 <= version && (from._1 + 1 to version).forall(recs.contains)
+    val (baseV, base) =
+      if (warm) from
+      else cps.keySet.filter(_ <= version).maxOption
+        .fold((-1L, Map.empty[String, String]))(v => (v, parseObjFile(cps(v))))
+    version -> (baseV + 1 to version).foldLeft(base) { (st, v) =>
+      def missing(cause: Throwable) = new IllegalStateException(
+        s"version $version cannot be replayed: record $v is missing (older than the retention " +
+          "horizon, trimmed by checkpointing, or a corrupt _meta dir)", cause)
+      try applyRecordFile(st, recs.getOrElse(v, throw missing(null)))
+      catch { case e: java.nio.file.NoSuchFileException => throw missing(e) }
+    }
+  }
+
+  /** Bring `cache` to the on-disk head: no-op if the version matches, else
+    * [[replay]] onward from the cached state (only the new records) or,
+    * after another writer's checkpoint cleanup, from its checkpoint. */
   private def refresh(): Unit = {
     val (recs, cps) = listEntries()
     val cur = (recs.keySet ++ cps.keySet).foldLeft(-1L)(math.max)
-    if (cur == -1L) {
-      // empty log: base state is the retired single-file metastate if present
-      if (cache._1 == Long.MinValue)
-        cache = (Long.MinValue,
-          if (Files.exists(legacyPath)) parseObjFile(legacyPath) else Map.empty)
-      return
-    }
-    if (cache._1 == cur) return
-    val warmTail = cache._1 != Long.MinValue && cache._1 < cur &&
-      (cache._1 + 1 to cur).forall(recs.contains)
-    if (warmTail) {
-      var st = cache._2
-      (cache._1 + 1 to cur).foreach(v => st = applyRecordFile(st, recs(v)))
-      cache = (cur, st)
-    } else {
-      val baseV = cps.keySet.filter(_ <= cur).maxOption
-      var st: Map[String, String] = baseV match {
-        case Some(v) => parseObjFile(cps(v))
-        case None =>
-          if (Files.exists(legacyPath)) parseObjFile(legacyPath)
-          else Map.empty[String, String]
-      }
-      (baseV.getOrElse(-1L) + 1 to cur).foreach { v =>
-        recs.get(v) match {
-          case Some(p) => st = applyRecordFile(st, p)
-          case None => throw new IllegalStateException(
-            s"metadata log gap: record $v missing below head $cur (corrupt _meta dir)")
-        }
-      }
-      cache = (cur, st)
-    }
+    if (cur != -1L && cache._1 != cur) cache = replay(recs, cps, cur, cache)
   }
 
   /** Full-state checkpoint at version `v`, then retention: keep this and

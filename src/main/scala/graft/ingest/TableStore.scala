@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.LocalScan
-import graft.codec.CanonicalJson
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.SortedSet
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -34,14 +35,20 @@ import scala.util.Using
   *     need.
   *
   * One commit point for all nine tables: every table is read through a
-  * file manifest in the metastate, never by listing a directory. A batch
-  * stages its files (invisible until listed), then ONE metadata-log
-  * record publishes the append files, the touched state buckets' new
-  * file lists and the watermark together — the Spark analogue of the
-  * reference committing a block's txn COPY and state upserts in one
-  * serializable transaction (cockroach.go:136-199). A crash or failure
-  * before that record leaves only unlisted files: readers never see them
-  * and the replayed batch re-merges against the unchanged state.
+  * file manifest in the metastate, never by listing a directory. A
+  * mutation stages its files (invisible until listed), then [[commit]] —
+  * the one method that writes the metadata log — publishes the append
+  * files with their index lines, the touched state buckets' new file
+  * lists and the watermark in ONE record, and sweeps the files it
+  * retired — the Spark analogue of the reference committing a block's txn
+  * COPY and state upserts in one serializable transaction
+  * (cockroach.go:136-199). A crash or failure before that record leaves
+  * only unlisted files: readers never see them and the replayed batch
+  * re-merges against the unchanged state.
+  *
+  * `nBuckets` and `roundsPerPartition` fix where a key or a round lives,
+  * so the first commit records them (metastate `layout`) and opening the
+  * store with other values throws `IllegalArgumentException`.
   *
   * `readOnly = true` declares a query-only session over a directory some
   * other process writes: every mutation path throws. Reads never write,
@@ -73,9 +80,24 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
                        val metaCheckpointInterval: Int = 64) {
   import TableStore._
 
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
   ForkFreeLocalFs.install(spark.sparkContext.hadoopConfiguration)
   graft.plans.LocalSortFold.install(spark)
+
+  // The metastate KV: the append-only metadata log ([[MetaLog]]). A commit
+  // appends one O(batch) record; readers materialize checkpoint + tail
+  // once per log version into the in-driver cache.
+  private val metaLog = new MetaLog(root, metaCheckpointInterval)
+
+  // version-keyed cache of parsed index structures (decoded blooms,
+  // round stats): re-parsed once per commit, not once per query
+  private val parsedCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Any)]()
+
+  private val layout = s"nBuckets=$nBuckets roundsPerPartition=$roundsPerPartition"
+  metastate.get(MetaLayout).filter(_ != layout).foreach { stored =>
+    throw new IllegalArgumentException(s"store $root was created with $stored, opened with $layout: " +
+      "bucket and range-bucket lookups would miss its committed rows")
+  }
 
   private def path(table: String) = s"$root/$table"
 
@@ -111,8 +133,8 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   //
   //   - `stageAppend` writes a batch's files into the range dirs but does
   //     NOT publish them — it returns the file list;
-  //   - `BlockIngest` folds the lists of all three append tables into the
-  //     SINGLE metastate write that also bumps the watermark, so data,
+  //   - `commit` publishes the lists of all three append tables in the
+  //     SINGLE metastate record that also bumps the watermark, so data,
   //     manifest, and watermark commit atomically (a crash mid-batch
   //     leaves orphan files that readers never see and `vacuum` removes);
   //   - `readRounds` prunes the manifest driver-side by the round range
@@ -162,10 +184,10 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     else (0 until nBuckets).flatMap(b => fileLines(st.get(bucketManifestKey(table, b))))
   }
 
-  def manifestKey(table: String): String = s"manifest.$table"
+  private def manifestKey(table: String): String = s"manifest.$table"
 
   /** Metastate key of one state bucket's committed file list. */
-  def bucketManifestKey(table: String, bucket: Int): String = s"manifest.$table.bkt=$bucket"
+  private def bucketManifestKey(table: String, bucket: Int): String = s"manifest.$table.bkt=$bucket"
 
   private def fileLines(v: Option[String]): Seq[String] =
     v.map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
@@ -301,12 +323,13 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
       line.substring(0, i) -> line.substring(i + 1)
     }.toMap).getOrElse(Map.empty)
 
-  def renderIndexLines(m: Map[String, String]): String =
+  private def renderIndexLines(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }.mkString("\n")
 
-  /** Per-file index entries for the given files — round min/max stats
-    * plus one bloom per indexed column, computed in ONE job per table
-    * that reads only `round` and the indexed columns. collect_set skips
+  /** Per-file index entries for the given files, by metastate key
+    * ([[TableStore.roundStatsKey]], [[TableStore.bloomKey]]) — round
+    * min/max stats plus one bloom per indexed column, computed in ONE job
+    * per table that reads only `round` and the indexed columns. collect_set skips
     * nulls, so a file with no non-null key (e.g. all-inner-txn files for
     * txid) gets an empty bloom: provably key-free, always pruned.
     *
@@ -318,9 +341,8 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * outside the staged set is a hard error for the same reason. The only
     * legitimate absence is a zero-row file, which Spark's partitioned
     * writer does not produce. */
-  private def buildFileIndex(table: String, files: Seq[String])
-      : (Map[String, String], Map[String, Map[String, String]]) = {
-    if (files.isEmpty) return (Map.empty, Map.empty)
+  private def buildFileIndex(table: String, files: Seq[String]): Map[String, Map[String, String]] = {
+    if (files.isEmpty) return Map.empty
     val keyCols = TableStore.IndexedColumns.getOrElse(table, Nil)
     // collect_SET: dedupes per file executor-side, so the driver receives
     // distinct keys only and blooms are sized by cardinality, not row
@@ -338,28 +360,11 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
         s"${unexpected.take(3).mkString(", ")} — rel-path derivation and " +
         "staging layout disagree; indexing these would mis-key the blooms")
     val stats = byRel.map { case (rel, r) => rel -> s"${r.getLong(1)}:${r.getLong(2)}" }.toMap
-    val blooms = keyCols.zipWithIndex.map { case (c, i) =>
-      c -> byRel.map { case (rel, r) =>
+    ((roundStatsKey(table) -> stats) +: keyCols.zipWithIndex.map { case (c, i) =>
+      bloomKey(table, c) -> byRel.map { case (rel, r) =>
         rel -> FileBloom.build(r.getSeq[String](3 + i)).encode
       }.toMap
-    }.toMap
-    (stats, blooms)
-  }
-
-  private def encodeStats(m: Map[String, (Long, Long)]): Map[String, String] =
-    m.map { case (k, (lo, hi)) => k -> s"$lo:$hi" }
-
-  /** APPEND kvs ([[MetaLog]] `app` op) carrying ONLY the batch's staged
-    * files' index lines (round stats + every indexed column's blooms) —
-    * O(batch) commit payload, folded into the batch's single commit
-    * record so index and manifest can never disagree. */
-  def indexAppendKvs(table: String, files: Seq[String]): Seq[(String, String)] = {
-    if (files.isEmpty) return Nil
-    val (stats, blooms) = buildFileIndex(table, files)
-    (TableStore.roundStatsKey(table) -> renderIndexLines(stats)) +:
-      blooms.toSeq.map { case (keyCol, entries) =>
-        TableStore.bloomKey(table, keyCol) -> renderIndexLines(entries)
-      }
+    }).toMap
   }
 
   /** Manifest files that might contain `key` within the round range:
@@ -382,54 +387,21 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
       rounds: Option[SortedSet[Long]] = None): DataFrame =
     scanManifest(table, bloomCandidateFiles(table, keyCol, key, lo, hi, rounds))
 
-  // txid-specific surface (kept for the optimizer rule and callers)
-  def txidBloomRaw: Map[String, String] = fileBloomRaw("txn", "txid")
-  def txidCandidateFiles(txid: String, lo: Option[Long] = None, hi: Option[Long] = None): Seq[String] =
-    bloomCandidateFiles("txn", "txid", txid, lo, hi)
-
-  /** Post-rewrite index maintenance: drop entries for files that left
-    * the manifest, rebuild entries for rewritten files. These are full
-    * SET kvs — maintenance ops (prune/compact) rewrite whole file sets,
-    * so O(table files) is their inherent cost, unlike per-batch commits. */
-  private def bloomMaintenanceKvs(table: String, newManifest: Seq[String],
-      rewritten: Seq[String]): Seq[(String, String)] = {
-    val keep = newManifest.toSet
-    val (stats, blooms) = buildFileIndex(table, rewritten)
-    val statsKept = encodeStats(fileRoundStatsRaw(table)).filter { case (f, _) => keep(f) }
-    (TableStore.roundStatsKey(table) -> renderIndexLines(statsKept ++ stats)) +:
-      TableStore.IndexedColumns.getOrElse(table, Nil).map { keyCol =>
-        val kept = fileBloomRaw(table, keyCol).filter { case (f, _) => keep(f) }
-        TableStore.bloomKey(table, keyCol) ->
-          renderIndexLines(kept ++ blooms.getOrElse(keyCol, Map.empty))
-      }
-  }
-
   /** Prune rows with round < keep: whole range buckets below the boundary
     * drop out of the manifest unread; the boundary bucket's files are
     * rewritten (read → filter → stage → swap into the manifest). Publishes
-    * the new manifest immediately (maintenance op, not part of a batch). */
-  def pruneRounds(table: String, keep: Long): Unit = {
+    * the new manifest immediately, in one record with `sets` (maintenance
+    * op, not part of a batch), then vacuums the table. */
+  def pruneRounds(table: String, keep: Long, sets: Seq[(String, String)] = Nil): Unit = {
     val boundary = keep / roundsPerPartition
-    val (atBoundary, clear) =
-      manifest(table).filter(f => rbktOf(f) >= boundary).partition(f => rbktOf(f) == boundary)
+    val dropped = manifest(table).filter(f => rbktOf(f) <= boundary)
+    val atBoundary = dropped.filter(f => rbktOf(f) == boundary)
     val rewritten =
       if (atBoundary.isEmpty) Nil
       else stageAppend(table, readFiles(table, atBoundary).filter(col("round") >= keep))
-    val newManifest = clear ++ rewritten
-    putMetastate((manifestKey(table) -> newManifest.mkString("\n")) +:
-      bloomMaintenanceKvs(table, newManifest, rewritten): _*)
+    commit(staged = Seq(table -> rewritten), retired = Map(table -> dropped), sets = sets)
     vacuum(table)
   }
-
-  /** Compact an append table's range buckets: every bucket whose committed
-    * file count exceeds `maxFilesPerBucket` is rewritten as one file-set
-    * (read → stage → manifest swap → vacuum). Micro-batch ingest adds one
-    * file-set per batch per bucket, so steady-state streaming needs this
-    * periodically — the manifest makes it a metadata swap, invisible to
-    * concurrent readers resolving the old manifest. Returns the number of
-    * buckets compacted. */
-  def compact(table: String, maxFilesPerBucket: Int = 8): Int =
-    compactWhere(table, maxFilesPerBucket, _ => true, vacuumAfter = true)
 
   /** Compaction cadence for the ingest loop: compact only SEALED range
     * buckets — those entirely below `activeRbkt` (the bucket the next
@@ -442,31 +414,27 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * rounds-per-bucket / rounds-per-batch — the manifest's file count is
     * bounded, flat in chain length per bucket. The check is a
     * driver-side scan of the cached manifest: a no-op batch costs no IO
-    * and no Spark job. */
+    * and no Spark job. `activeRbkt = Long.MaxValue` compacts every
+    * oversized bucket.
+    *
+    * No vacuum: this runs INSIDE the ingest loop, where a concurrent
+    * reader may still be scanning a pre-compaction snapshot (a
+    * createViews view, a long query) — the manifest swap retires the old
+    * files logically, and the PHYSICAL delete waits for the explicit
+    * [[vacuum]] maintenance call (the Delta/Iceberg
+    * logical-now-physical-later retention contract). */
   def compactSealed(table: String, activeRbkt: Long, maxFilesPerBucket: Int = 8): Int =
-    // vacuumAfter = false: this runs INSIDE the ingest loop, where a
-    // concurrent reader may still be scanning a pre-compaction snapshot
-    // (a createViews view, a long query) — the manifest swap retires the
-    // old files logically, and the PHYSICAL delete waits for the
-    // explicit `vacuum` maintenance call (the Delta/Iceberg
-    // logical-now-physical-later retention contract).
-    compactWhere(table, maxFilesPerBucket, _ < activeRbkt, vacuumAfter = false)
+    compactWhere(table, maxFilesPerBucket, _ < activeRbkt)
 
-  private def compactWhere(table: String, maxFilesPerBucket: Int,
-                           eligible: Long => Boolean, vacuumAfter: Boolean): Int = {
-    val byBucket = manifest(table).groupBy(rbktOf)
-    val oversized = byBucket.filter { case (b, fs) =>
+  private def compactWhere(table: String, maxFilesPerBucket: Int, eligible: Long => Boolean): Int = {
+    val oversized = manifest(table).groupBy(rbktOf).filter { case (b, fs) =>
       eligible(b) && fs.size > maxFilesPerBucket
     }
     if (oversized.isEmpty) return 0
-    val keepAsIs = byBucket.view.filterKeys(b => !oversized.contains(b)).values.flatten.toSeq
+    val old = oversized.values.flatten.toSeq
     val rewritten = stageAppend(table,
-      readFiles(table, oversized.values.flatten.toSeq)
-        .repartition(oversized.size, (col("round") / lit(roundsPerPartition)).cast("long")))
-    val newManifest = keepAsIs ++ rewritten
-    putMetastate((manifestKey(table) -> newManifest.mkString("\n")) +:
-      bloomMaintenanceKvs(table, newManifest, rewritten): _*)
-    if (vacuumAfter) vacuum(table)
+      readFiles(table, old).repartition(oversized.size, (col("round") / lit(roundsPerPartition)).cast("long")))
+    commit(staged = Seq(table -> rewritten), retired = Map(table -> old))
     oversized.size
   }
 
@@ -519,10 +487,6 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * query touches 1/4096 of the table. */
   def bucketOfValue(key: Any): Int = TableStore.bucketOfValue(key, nBuckets)
 
-  /** Point-lookup read: just the single bucket `key` hashes to. The caller
-    * still applies the exact-key filter; the bucket only bounds the scan. */
-  def readStateKeyed(table: String, key: Any): DataFrame = queryState(table, Some(key))
-
   /** A read-API query's state rows: the bucket `key` hashes to when the
     * query carries an exact key on the table's bucketing column (the
     * Spark analogue of the reference's primary-key probe), or the whole
@@ -532,43 +496,36 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     scanManifest(table, key.fold(manifest(table))(k => bucketFiles(table, Seq(bucketOfValue(k)))))
 
   /** Replace the given buckets of a state table with `merged` (rows
-    * bucketed by `keyCol`) as one commit of its own: stage, publish the
-    * buckets' new file lists, then sweep the retired files. Rows of
-    * buckets outside `touched` are dropped; a touched bucket `merged` has
-    * no rows for is emptied. For the bulk loads (genesis, a seeded
-    * state); a batch's merges go through [[writeStateBucketsStaged]] and
-    * commit with the batch. */
-  def writeStateBuckets(table: String, keyCol: String, merged: DataFrame, touched: Seq[Int]): Unit = {
-    putMetastate(writeStateBucketsStaged(table, keyCol, merged, touched): _*)
-    sweepStateBuckets(table, touched)
-  }
+    * bucketed by `keyCol`) as one commit of its own. Rows of buckets
+    * outside `touched` are dropped; a touched bucket `merged` has no rows
+    * for is emptied. For the bulk loads (a seeded state); a batch's merges
+    * and genesis go through [[writeStateBucketsStaged]] and commit with
+    * the rest of their record. */
+  def writeStateBuckets(table: String, keyCol: String, merged: DataFrame, touched: Seq[Int]): Unit =
+    commit(buckets = Seq(table -> writeStateBucketsStaged(table, keyCol, merged, touched)))
 
   /** Stage `merged` as the new content of the `touched` buckets WITHOUT
     * publishing it. The merge plan reads the files it replaces, so new
     * files go under new names and the old ones stay untouched until the
-    * commit retires them. Returns one metastate `set` per touched bucket
-    * listing its new files (empty when the bucket emptied), for the
-    * caller's commit record; [[sweepStateBuckets]] after that commit
-    * deletes the retired files. (The name keeps the `writeStateBuckets`
-    * prefix: call-site phase attribution, as in perfbench's job listener,
-    * counts this job as a merge.) */
+    * commit retires them. Returns each touched bucket's new files (none
+    * when the bucket emptied), for [[commit]]'s `buckets`. (The name
+    * keeps the `writeStateBuckets` prefix: call-site phase attribution,
+    * as in perfbench's job listener, counts this job as a merge.) */
   private[ingest] def writeStateBucketsStaged(table: String, keyCol: String, merged: DataFrame,
-                                              touched: Seq[Int]): Seq[(String, String)] = {
+                                              touched: Seq[Int]): Map[Int, Seq[String]] = {
     requireWritable("writeStateBuckets")
     val byBucket = stage(table, merged.withColumn("bkt", bucketOf(keyCol)), "bkt")
       .groupBy(_.takeWhile(_ != '/').stripPrefix("bkt=").toInt)
     (byBucket -- touched).values.flatten.foreach(f => Files.delete(Paths.get(s"${path(table)}/$f")))
-    touched.map(b => bucketManifestKey(table, b) -> byBucket.getOrElse(b, Nil).mkString("\n"))
+    touched.map(b => b -> byBucket.getOrElse(b, Nil)).toMap
   }
 
   /** After a commit: delete every file in the given buckets' dirs that
     * their committed manifests do not list — the files the commit retired
     * and any crash orphans. The writer's own cleanup; a store has a
     * single writer. */
-  private[ingest] def sweepStateBuckets(table: String, buckets: Seq[Int]): Unit = {
-    requireWritable("sweepStateBuckets")
+  private def sweepStateBuckets(table: String, buckets: Seq[Int]): Unit =
     sweep(buckets.map(b => Paths.get(s"${path(table)}/bkt=$b")), bucketFiles(table, buckets).toSet)
-  }
 
   /** Register every maintained table as a temp view (plus the graft UDFs),
     * so the whole surface is queryable from `spark.sql` — the "point the
@@ -592,18 +549,6 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   }
 
   // ── Metastate (KV) ─────────────────────────────────────────────────
-  //
-  // Backed by the append-only metadata log ([[MetaLog]]): a commit
-  // appends one O(batch) record; readers materialize checkpoint + tail
-  // once per log version into the in-driver cache. A pre-log
-  // `metastate.json` is honored as the base state (read-only migration).
-
-  private val metaLog = new MetaLog(root, metaCheckpointInterval)
-
-  // version-keyed cache of parsed index structures (decoded blooms,
-  // round stats): re-parsed once per commit, not once per query
-  private val parsedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Any)]()
 
   def metastate: Map[String, String] = metaLog.state()
 
@@ -622,7 +567,7 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
   /** Snapshot (time-travel) read of an append table: exactly the rows
     * committed as of metadata-log `version` — what a reproducible corpus
     * build pins so retraining months later reads byte-identical data.
-    * Valid until an explicit `vacuum`/`compact(vacuumAfter)` physically
+    * Valid until an explicit `vacuum` (or `pruneRounds`) physically
     * removes files the old manifest references (`compactSealed` only
     * REPLACES files logically, so snapshots survive the in-loop
     * compaction cadence). Append tables only: a state commit's sweep
@@ -648,18 +593,64 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
       .unionByName(a.exceptAll(b).withColumn("_op", org.apache.spark.sql.functions.lit("removed")))
   }
 
-  def putMetastate(kvs: (String, String)*): Unit = {
-    requireWritable("putMetastate")
-    metaLog.append(sets = kvs)
-  }
-
-  /** One commit record: `sets` replace keys (watermark, accounts…),
-    * `appends` add newline-joined lines (manifests, index entries). The
-    * micro-batch's single atomic commit point. */
-  def commitMetastate(sets: Seq[(String, String)],
-                      appends: Seq[(String, String)]): Unit = {
-    requireWritable("commitMetastate")
-    metaLog.append(sets, appends)
+  /** The store's one publication point: appends ONE metadata-log record,
+    * then sweeps the state buckets it rewrote. Every mutation goes
+    * through it.
+    *
+    *   - `staged`: per append table, files from [[stageAppend]]. Their
+    *     manifest and index lines (round stats, blooms: one index-build
+    *     job per table, the tables concurrently on the ingest pool) are
+    *     appended — O(batch), flat in history;
+    *   - `retired`: per table of `staged`, committed files the record
+    *     drops (prune, compaction). Such a table's manifest and index are
+    *     set in full — O(table files), a maintenance op's inherent cost;
+    *   - `buckets`: per state table, each touched bucket's new files from
+    *     [[writeStateBucketsStaged]]; every listed bucket's file list is
+    *     set, and after the record its dir is swept of the files the
+    *     record retired and of crash orphans;
+    *   - `sets` replace scalar keys (watermark, accounts…), `appends` add
+    *     raw lines to a newline-joined key.
+    *
+    * The first record also sets `layout` (class doc). A failure before
+    * the record leaves only unlisted files. */
+  def commit(staged: Seq[(String, Seq[String])] = Nil,
+             retired: Map[String, Seq[String]] = Map.empty,
+             buckets: Seq[(String, Map[Int, Seq[String]])] = Nil,
+             sets: Seq[(String, String)] = Nil,
+             appends: Seq[(String, String)] = Nil): Unit = {
+    requireWritable("commit")
+    val indexed = staged.filter { case (t, files) => files.nonEmpty || retired.contains(t) }
+    // One table (a maintenance op) builds in the calling thread, so its
+    // job keeps the caller's call site: call-site phase attribution (as in
+    // perfbench's job listener) bills a compaction's index build to
+    // `compactWhere`.
+    val indexes = indexed match {
+      case Seq((t, files)) => Seq(buildFileIndex(t, files))
+      case _ =>
+        implicit val ec: ExecutionContext = ingestPool
+        settle(indexed.map { case (t, files) => Future(buildFileIndex(t, files)) }).map(_.get)
+    }
+    val st = metastate
+    val (tableApps, tableSets) = indexed.zip(indexes).partitionMap { case ((t, files), index) =>
+      retired.get(t) match {
+        case None => Left((manifestKey(t) -> files.mkString("\n")) +:
+          index.toSeq.map { case (k, m) => k -> renderIndexLines(m) })
+        case Some(gone) =>
+          val now = manifest(t).filterNot(gone.toSet) ++ files
+          val keep = now.toSet
+          Right((manifestKey(t) -> now.mkString("\n")) +:
+            (roundStatsKey(t) +: IndexedColumns.getOrElse(t, Nil).map(bloomKey(t, _))).map { k =>
+              k -> renderIndexLines(
+                parseIndexLines(st.get(k)).filter(e => keep(e._1)) ++ index.getOrElse(k, Map.empty))
+            })
+      }
+    }
+    val bucketSets = buckets.flatMap { case (t, bs) =>
+      bs.toSeq.map { case (b, files) => bucketManifestKey(t, b) -> files.mkString("\n") }
+    }
+    val layoutSet = if (st.contains(MetaLayout)) Nil else Seq(MetaLayout -> layout)
+    metaLog.append(tableSets.flatten ++ bucketSets ++ layoutSet ++ sets, tableApps.flatten ++ appends)
+    buckets.foreach { case (t, bs) => sweepStateBuckets(t, bs.keys.toSeq) }
   }
 
   private def requireWritable(op: String): Unit =
@@ -691,8 +682,6 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
       }
     math.max(hiStats, hiScan) + 1L
   }
-
-  def setNextRound(r: Long): Unit = putMetastate(MetaNextRound -> r.toString)
 }
 
 object TableStore {
@@ -700,6 +689,24 @@ object TableStore {
   val MetaSpecialAccounts = "accounts"
   val MetaNetwork = "network"
   val MetaMigration = "migration"
+  val MetaLayout = "layout"
+
+  /** Pool for intra-batch write and index-build parallelism (9
+    * independent table writes). Bounded and shared: one pool regardless
+    * of how many stores exist. */
+  private[ingest] lazy val ingestPool: ExecutionContext =
+    ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(9, r => {
+        val t = new Thread(r, "graft-ingest")
+        t.setDaemon(true)
+        t
+      }))
+
+  /** Every future's outcome, after ALL of them finished: a failed batch
+    * rethrows only once no sibling write is still running, so a retry of
+    * the batch cannot race its own stale writes. */
+  private[ingest] def settle[T](fs: Seq[Future[T]]): Seq[scala.util.Try[T]] =
+    fs.map(f => Await.ready(f, Duration.Inf).value.get)
 
   /** The tables rows are only appended to (range-bucketed by round,
     * snapshot-readable); every other table in [[Schemas]] is a keyed

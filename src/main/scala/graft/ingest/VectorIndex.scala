@@ -101,7 +101,7 @@ object VectorIndex {
       "nlist" -> JStr(collected.size.toString),
       "m" -> JStr(codebooks.map(_.size).getOrElse(0).toString),
       "dims" -> JStr(collected.headOption.map(_._2.length).getOrElse(0).toString)))
-    store.putMetastate(metaKey(name) -> meta)
+    store.commit(sets = Seq(metaKey(name) -> meta))
     Loaded(name, dir, collected, codebooks)
   }
 
@@ -325,8 +325,7 @@ object VectorIndex {
         cid.as("cid"), v.as("vec"))
     }
     encoded.write.mode("errorifexists").parquet(seg)
-    store.commitMetastate(sets = Nil,
-      appends = Seq(metaKeySegs(name, label) -> renderSegLine(idx.dir, seg, coarseBranches)))
+    store.commit(appends = Seq(metaKeySegs(name, label) -> renderSegLine(idx.dir, seg, coarseBranches)))
     seg
   }
 
@@ -447,8 +446,8 @@ object VectorIndex {
         .write.mode("errorifexists").parquet(merged)
       (merged, cb)
     }
-    store.putMetastate(metaKeySegs(name, label) ->
-      mergedLines.map { case (dir, cb) => renderSegLine(idx.dir, dir, cb) }.mkString("\n"))
+    store.commit(sets = Seq(metaKeySegs(name, label) ->
+      mergedLines.map { case (dir, cb) => renderSegLine(idx.dir, dir, cb) }.mkString("\n")))
     mergedLines.map(_._1)
   }
 

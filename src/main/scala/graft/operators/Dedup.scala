@@ -482,8 +482,6 @@ object Dedup {
       labels = next
       converged = changed == 0
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $round converged=$converged")
     }
     edges.unpersist()
     skel.unpersist()

@@ -670,7 +670,8 @@ object Sharding {
     assign(df, keyCol, nShards)
       .repartition(nShards * filesPerShard, col("shard"),
         pmod(xxhash64(col(keyCol)), lit(filesPerShard)))
-      .write.mode("overwrite").partitionBy("shard").parquet(outDir)
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("shard").parquet(outDir)
 
   /** Linear range quantization to [0, 2^bits): floor((v-lo)·2^bits /
     * (hi-lo+1)) in exact long arithmetic, clamped. The z-order

@@ -1008,7 +1008,8 @@ object TextOps {
         explode(col("ws")).as("term"))
       .groupBy("doc", "len", "term").agg(count(lit(1)).cast("long").as("tf"))
       .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("bucket").parquet(s"$dir/postings")
   }
 
   /** Incremental postings update: NEW documents append their posting

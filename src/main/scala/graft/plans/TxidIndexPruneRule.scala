@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.StringType
   * view plans as Filter over a parquet relation listing EVERY committed
   * file. This rule spots the conjunct `txid = <literal>` directly above a
   * relation rooted in the store's txn directory and swaps the relation
-  * for one over [[TableStore.txidCandidateFiles]] — the bloom-negative
-  * files never reach the file index. The original Filter stays on top
+  * for one over the files whose txid bloom ([[TableStore.fileBloomDecoded]])
+  * may hold the literal — the bloom-negative files never reach the file
+  * index. The original Filter stays on top
   * (bloom false positives, remaining conjuncts), and the replacement's
   * attributes are aliased back to the original exprIds so the parent plan
   * resolves untouched. A relation already reduced to the candidate set is

@@ -568,7 +568,7 @@ object Api {
 
   def applicationBoxes(store: TableStore, q: ApplicationBoxQuery): (DataFrame, Long) = {
     val asOf = store.nextRound - 1
-    var df = store.readStateKeyed("app_box", q.applicationId)
+    var df = store.queryState("app_box", Some(q.applicationId))
       .filter(col("app") === q.applicationId)
     q.boxName.foreach(n => df = df.filter(col("name") === lit(n)))
     q.prevFinalBox.foreach(p => df = df.filter(col("name") > lit(p)))
@@ -669,13 +669,11 @@ object Api {
   def nextRoundToLoad(store: TableStore): Long = store.nextRoundToLoad
 
   /** DeleteTransactions(keep): prune txn rows older than `keep`, record the
-    * watermark in metastate (dummy.go:107; types.go:33-36). Range buckets
-    * wholly below `keep` drop out of the manifest unread; only the
-    * boundary bucket is rewritten. */
-  def deleteTransactions(store: TableStore, keep: Long): Unit = {
-    store.pruneRounds("txn", keep)
-    store.putMetastate("pruned" ->
+    * watermark in metastate (dummy.go:107; types.go:33-36), in one
+    * commit. Range buckets wholly below `keep` drop out of the manifest
+    * unread; only the boundary bucket is rewritten. */
+  def deleteTransactions(store: TableStore, keep: Long): Unit =
+    store.pruneRounds("txn", keep, sets = Seq("pruned" ->
       graft.codec.CanonicalJson.render(graft.codec.CanonicalJson.JObj.of(
-        "OldestRound" -> graft.codec.CanonicalJson.JInt(keep))))
-  }
+        "OldestRound" -> graft.codec.CanonicalJson.JInt(keep)))))
 }

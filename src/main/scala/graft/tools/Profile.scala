@@ -19,7 +19,6 @@ object Profile {
       .flatMap(_.split(';')).filter(_.contains('='))
       .map { kv => val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1) }
     val spark = graft.GraftSession.local(cpus, extra: _*)
-    spark.sparkContext.setLogLevel("WARN")
     // comma-separated names profile several queries in ONE JVM (same
     // warmup discipline per query; A/B within one sitting)
     for (nm <- name.split(",")) {

@@ -23,8 +23,7 @@ class ManifestSpec extends SparkSpec {
     assert(files.nonEmpty)
     assert(store.read("block_header").count() == 0, "uncommitted files must be invisible")
 
-    // commit
-    store.putMetastate(store.manifestKey("block_header") -> files.mkString("\n"))
+    store.commit(staged = Seq("block_header" -> files))
     assert(store.read("block_header").count() == 2)
 
     // a second staged-but-never-committed batch (crash): still invisible,
@@ -42,7 +41,7 @@ class ManifestSpec extends SparkSpec {
   test("readRounds prunes to intersecting range buckets and matches a full-scan filter") {
     val store = new TableStore(spark, tmpDir("graft-man-rr"), nBuckets = 2, roundsPerPartition = 4L)
     val files = store.stageAppend("block_header", headerDf(0L until 12L))
-    store.putMetastate(store.manifestKey("block_header") -> files.mkString("\n"))
+    store.commit(staged = Seq("block_header" -> files))
     assert(files.map(_.takeWhile(_ != '/')).distinct.sorted ==
       Seq("rbkt=0", "rbkt=1", "rbkt=2"), "12 rounds / 4 per bucket = 3 buckets")
 
@@ -67,15 +66,14 @@ class ManifestSpec extends SparkSpec {
     val store = new TableStore(spark, tmpDir("graft-man-cp"), nBuckets = 2, roundsPerPartition = 4L)
     // 8 one-round commits -> buckets 0 and 1, four file-sets each
     (0L until 8L).foreach { r =>
-      val files = store.stageAppend("block_header", headerDf(Seq(r)))
-      store.putMetastate(store.manifestKey("block_header") ->
-        (store.manifest("block_header") ++ files).mkString("\n"))
+      store.commit(staged = Seq("block_header" -> store.stageAppend("block_header", headerDf(Seq(r)))))
     }
     val before = store.manifest("block_header")
     assert(before.count(_.startsWith("rbkt=0/")) >= 4)
 
-    val n = store.compact("block_header", maxFilesPerBucket = 2)
+    val n = store.compactSealed("block_header", activeRbkt = Long.MaxValue, maxFilesPerBucket = 2)
     assert(n == 2, "both buckets exceed the threshold")
+    store.vacuum("block_header")
     val after = store.manifest("block_header")
     assert(after.count(_.startsWith("rbkt=0/")) < before.count(_.startsWith("rbkt=0/")))
     assert(store.read("block_header").select("round").collect().map(_.getLong(0)).sorted.toSeq
@@ -85,14 +83,13 @@ class ManifestSpec extends SparkSpec {
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${store.root}/block_header/$f")))
     }
     // idempotent: nothing left to compact
-    assert(store.compact("block_header", maxFilesPerBucket = 2) == 0)
+    assert(store.compactSealed("block_header", activeRbkt = Long.MaxValue, maxFilesPerBucket = 2) == 0)
   }
 
   test("compactSealed rewrites only buckets below the active one") {
     val store = new TableStore(spark, tmpDir("graft-man-cs"), nBuckets = 2, roundsPerPartition = 4L)
     (0L until 8L).foreach { r =>
-      val files = store.stageAppend("block_header", headerDf(Seq(r)))
-      store.commitMetastate(Nil, Seq(store.manifestKey("block_header") -> files.mkString("\n")))
+      store.commit(staged = Seq("block_header" -> store.stageAppend("block_header", headerDf(Seq(r)))))
     }
     val before = store.manifest("block_header")
     assert(before.count(_.startsWith("rbkt=1/")) == 4)
@@ -117,8 +114,7 @@ class ManifestSpec extends SparkSpec {
 
   test("pruneRounds drops whole buckets unread and rewrites only the boundary bucket") {
     val store = new TableStore(spark, tmpDir("graft-man-pr"), nBuckets = 2, roundsPerPartition = 4L)
-    val files = store.stageAppend("block_header", headerDf(0L until 12L))
-    store.putMetastate(store.manifestKey("block_header") -> files.mkString("\n"))
+    store.commit(staged = Seq("block_header" -> store.stageAppend("block_header", headerDf(0L until 12L))))
 
     store.pruneRounds("block_header", keep = 6L)
     val remaining = store.read("block_header").select("round").collect().map(_.getLong(0)).sorted
@@ -137,9 +133,7 @@ class ManifestSpec extends SparkSpec {
     val store = new TableStore(spark, tmpDir("graft-asof"), nBuckets = 2,
       roundsPerPartition = 4L, metaCheckpointInterval = 2)
     def commit(rounds: Seq[Long]): Unit =
-      store.commitMetastate(sets = Nil, appends = Seq(
-        store.manifestKey("block_header") ->
-          store.stageAppend("block_header", headerDf(rounds)).mkString("\n")))
+      store.commit(staged = Seq("block_header" -> store.stageAppend("block_header", headerDf(rounds))))
 
     commit(Seq(0L, 1L))   // v0
     commit(Seq(2L, 3L))   // v1
@@ -195,7 +189,7 @@ class ManifestSpec extends SparkSpec {
     val orphans = plantOrphans()
     assert(store.readState("asset").count() == 10)
     assert(store.readStateBuckets("asset", Seq(0, 1)).count() == 10)
-    assert((0L until 10L).forall(i => store.readStateKeyed("asset", i).filter(col("id") === i).count() == 1))
+    assert((0L until 10L).forall(i => store.queryState("asset", Some(i)).filter(col("id") === i).count() == 1))
 
     // the next write to the buckets sweeps the orphans and its retired files
     store.writeStateBuckets("asset", "id", assetDf(0L until 4L), Seq(0, 1))

@@ -2,12 +2,13 @@ package graft.ingest
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
 
 /** Pins the append-only metadata log: set/append record semantics,
   * checkpoint + retention, crash-replay across a checkpoint boundary,
-  * pre-log `metastate.json` migration, cross-instance visibility, and the
-  * O(batch) commit payload that motivates the design. */
+  * cross-instance visibility, the O(batch) commit payload that motivates
+  * the design, and `TableStore.commit` as the store's one record writer. */
 class MetaLogSpec extends SparkSpec {
 
   private def metaFiles(root: String): Seq[String] =
@@ -59,18 +60,6 @@ class MetaLogSpec extends SparkSpec {
     assert(reader.state()("log") == (0 until 9).map(i => s"entry-$i").mkString("\n"))
   }
 
-  test("pre-log metastate.json is honored as the base state") {
-    val root = tmpDir("metalog")
-    Files.writeString(Paths.get(root, "metastate.json"),
-      """{"legacy_key":"legacy_value","wm":"7"}""")
-    val log = new MetaLog(root)
-    assert(log.state() == Map("legacy_key" -> "legacy_value", "wm" -> "7"))
-    log.append(Seq("wm" -> "8"), Seq("m" -> "f1"))
-    val reader = new MetaLog(root)
-    assert(reader.state() ==
-      Map("legacy_key" -> "legacy_value", "wm" -> "8", "m" -> "f1"))
-  }
-
   test("an open instance sees another writer's commits (version-gated refresh)") {
     val root = tmpDir("metalog")
     val a = new MetaLog(root)
@@ -98,22 +87,45 @@ class MetaLogSpec extends SparkSpec {
 
   test("TableStore round-trips manifests and index lines through the log") {
     val root = tmpDir("store")
-    val store = new TableStore(spark, root)
-    store.commitMetastate(
-      sets = Seq(TableStore.MetaNextRound -> "5"),
-      appends = Seq(
-        store.manifestKey("txn") -> "rbkt=0/a.parquet\nrbkt=0/b.parquet",
-        TableStore.roundStatsKey("txn") -> "rbkt=0/a.parquet\t0:2\nrbkt=0/b.parquet\t3:4"))
-    assert(store.manifest("txn") == Seq("rbkt=0/a.parquet", "rbkt=0/b.parquet"))
-    assert(store.fileRoundStatsRaw("txn") ==
-      Map("rbkt=0/a.parquet" -> (0L, 2L), "rbkt=0/b.parquet" -> (3L, 4L)))
+    val store = new TableStore(spark, root, roundsPerPartition = 4L)
+    def stage(rounds: Seq[Long]): Seq[String] = store.stageAppend("txn", spark.createDataFrame(
+      rounds.map(r => Row(0, 1.toShort, 0L, s"TX$r", "{}", "{}", r)).asJava, TableStore.Schemas("txn")))
+    def statsRange(files: Seq[String]): (Long, Long) = {
+      val st = store.fileRoundStatsRaw("txn")
+      (files.map(st(_)._1).min, files.map(st(_)._2).max)
+    }
+    val first = stage(Seq(0L, 2L))
+    store.commit(staged = Seq("txn" -> first), sets = Seq(TableStore.MetaNextRound -> "5"))
+    assert(store.manifest("txn") == first)
+    assert(store.fileRoundStatsRaw("txn").keySet == first.toSet && statsRange(first) == (0L, 2L))
+    assert(store.fileBloomRaw("txn", "txid").keySet == first.toSet)
     assert(store.nextRound == 5)
-    // second commit APPENDS manifest + stats lines
-    store.commitMetastate(Nil, Seq(
-      store.manifestKey("txn") -> "rbkt=1/c.parquet",
-      TableStore.roundStatsKey("txn") -> "rbkt=1/c.parquet\t5:9"))
-    assert(store.manifest("txn").size == 3)
-    assert(store.fileRoundStatsRaw("txn")("rbkt=1/c.parquet") == (5L, 9L))
+    // the second commit APPENDS manifest + index lines: its record names
+    // only its own files
+    val second = stage(Seq(5L, 6L))
+    store.commit(staged = Seq("txn" -> second))
+    assert(store.manifest("txn") == first ++ second)
+    assert(statsRange(second) == (5L, 6L) && statsRange(first) == (0L, 2L))
+    val record = Files.readString(Paths.get(root, "_meta", f"${store.metaVersion}%020d.json"))
+    assert(second.forall(record.contains) && !first.exists(record.contains))
+  }
+
+  test("genesis is one commit that records the layout; another layout cannot reopen it") {
+    import graft.queries.EngineQueries.addr
+    val root = tmpDir("store-layout")
+    val store = new TableStore(spark, root, nBuckets = 4)
+    BlockIngest.initGenesis(store, (0 until 12).map(i => (addr(i), 1000L + i, "{}")), network = "net")
+    assert(store.metaVersion == 0, "accounts, network, migration and watermark in one record")
+    assert(store.nextRound == 0 && store.metastate(TableStore.MetaNetwork) == "net")
+    // 8 buckets would send point lookups to buckets the accounts are not in
+    intercept[IllegalArgumentException](new TableStore(spark, root, nBuckets = 8))
+    intercept[IllegalArgumentException](new TableStore(spark, root, nBuckets = 4, roundsPerPartition = 10L))
+    val reopened = new TableStore(spark, root, nBuckets = 4, readOnly = true)
+    (0 until 12).foreach { i =>
+      val (df, _) = graft.query.Api.accounts(reopened,
+        graft.query.Api.AccountQueryOptions(equalToAddress = Some(addr(i))))
+      assert(df.select("microalgos").collect().map(_.getLong(0)).toSeq == Seq(1000L + i), addr(i))
+    }
   }
 
   test("model check: random op sequences match an in-memory map, any reader, any interval") {
@@ -188,10 +200,10 @@ class MetaLogSpec extends SparkSpec {
   test("readOnly store refuses mutation and leaves uncommitted files in place") {
     val root = tmpDir("store")
     val rw = new TableStore(spark, root)
-    rw.putMetastate("x" -> "1")
+    rw.commit(sets = Seq("x" -> "1"))
     val ro = new TableStore(spark, root, readOnly = true)
     assert(ro.metastate("x") == "1")
-    intercept[IllegalStateException](ro.putMetastate("x" -> "2"))
+    intercept[IllegalStateException](ro.commit(sets = Seq("x" -> "2")))
     intercept[IllegalStateException](ro.stageAppend("txn", rw.read("txn")))
     // a writer's uncommitted part file in a state bucket (not even valid
     // parquet): never read, and a read-only store neither reads nor

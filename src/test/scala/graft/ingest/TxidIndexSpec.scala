@@ -37,7 +37,7 @@ class TxidIndexSpec extends SparkSpec {
     }
     val files = store.manifest("txn")
     assert(files.size >= 3)
-    val blooms = store.txidBloomRaw
+    val blooms = store.fileBloomRaw("txn", "txid")
     assert(files.forall(blooms.contains), "every committed file carries a bloom")
 
     // Pick a real root txid and its home file: the lookup must keep that
@@ -45,7 +45,7 @@ class TxidIndexSpec extends SparkSpec {
     val sample = store.read("txn").filter(col("txid").isNotNull)
       .select("txid", "round").collect().head
     val (txid, round) = (sample.getString(0), sample.getLong(1))
-    val cands = store.txidCandidateFiles(txid)
+    val cands = store.bloomCandidateFiles("txn", "txid", txid)
     assert(cands.nonEmpty && cands.size < files.size,
       s"expected pruning: ${cands.size} of ${files.size} files")
 
@@ -58,15 +58,16 @@ class TxidIndexSpec extends SparkSpec {
 
     // A txid that exists nowhere prunes everything (up to bloom fpp —
     // deterministic here: fixed blooms, fixed probe).
-    assert(store.txidCandidateFiles("NOPE" * 13).isEmpty)
+    assert(store.bloomCandidateFiles("txn", "txid", "NOPE" * 13).isEmpty)
     assert(Api.transactions(store,
       Api.TransactionFilter(txid = Some("NOPE" * 13)))._1.count() == 0)
 
     // Compaction rewrites files and rebuilds their blooms atomically with
     // the manifest swap: coverage and lookups survive.
-    assert(store.compact("txn", maxFilesPerBucket = 1) >= 1)
+    assert(store.compactSealed("txn", activeRbkt = Long.MaxValue, maxFilesPerBucket = 1) >= 1)
+    store.vacuum("txn")
     val filesAfter = store.manifest("txn")
-    val bloomsAfter = store.txidBloomRaw
+    val bloomsAfter = store.fileBloomRaw("txn", "txid")
     assert(filesAfter.forall(bloomsAfter.contains), "rebuilt blooms cover the new file set")
     assert(bloomsAfter.keySet.subsetOf(filesAfter.toSet), "stale entries dropped")
     assert(lookup(skip = false).map(_._1) == Seq(round))
@@ -149,7 +150,8 @@ class TxidIndexSpec extends SparkSpec {
     assert(store.readRounds("txn", Some(1L), Some(1L))
       .filter(col("round") === 1).count() == 1)
     // Stats survive compaction (rebuilt for the rewritten file set).
-    assert(store.compact("txn", maxFilesPerBucket = 1) >= 1)
+    assert(store.compactSealed("txn", activeRbkt = Long.MaxValue, maxFilesPerBucket = 1) >= 1)
+    store.vacuum("txn")
     val after = store.manifest("txn")
     assert(store.fileRoundStatsRaw("txn").keySet == after.toSet)
     assert(store.readRounds("txn", Some(1L), Some(1L))

@@ -62,7 +62,7 @@ class VectorIndexSpec extends SparkSpec {
     val corpus = corpusDF(60, 8).localCheckpoint()
     val published = VectorIndex.publish(store, "main", corpus.filter(col("id") < 5))
     // push the log through several checkpoints (trims old records)
-    (0 until 40).foreach(i => store.putMetastate(s"churn.$i" -> i.toString))
+    (0 until 40).foreach(i => store.commit(sets = Seq(s"churn.$i" -> i.toString)))
     assert(VectorIndex.load(store, "main").centroids == published.centroids)
     // a fresh read-only store (another JVM's view) sees the same index
     val reader = new TableStore(spark, root, nBuckets = 2, readOnly = true)

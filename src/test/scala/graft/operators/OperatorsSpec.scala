@@ -1308,6 +1308,25 @@ class OperatorsSpec extends SparkSpec {
     assert(touched.size <= 2, "two terms map to at most two buckets of eight")
   }
 
+  test("postings and shard rebuilds replace every partition under a dynamic session default") {
+    import spark.implicits._
+    withConf("spark.sql.sources.partitionOverwriteMode", "dynamic") {
+      val a = (1L to 40L).map(i => (i, s"w$i common")).toDF("doc_id", "text")
+      val b = Seq((1L, "common")).toDF("doc_id", "text")
+      val dir = tmpDir("bm25-rebuild")
+      graft.operators.TextOps.bm25PostingsBuild(dir, a, "doc_id", "text", nBuckets = 8)
+      graft.operators.TextOps.bm25PostingsBuild(dir, b, "doc_id", "text", nBuckets = 8)
+      val bucketsOfB = Seq(b.select(pmod(hash(lit("common")), lit(8))).head().getInt(0))
+      val bucketDirs = new java.io.File(s"$dir/postings").list().filter(_.startsWith("bucket="))
+      assert(bucketDirs.toSeq == bucketsOfB.map(n => s"bucket=$n"), "no bucket of A survives")
+      assert(spark.read.parquet(s"$dir/postings").count() == 1)
+      val out = s"${tmpDir("shard-rebuild")}/shards"
+      Sharding.writeShards(a, out, "text", nShards = 8)
+      Sharding.writeShards(b, out, "text", nShards = 8)
+      assert(spark.read.parquet(out).count() == 1, "no shard of A survives")
+    }
+  }
+
   test("mixtureSolver: want/take/rate/deficit exact; undeclared source gets zero") {
     import spark.implicits._
     val docs = Seq(

@@ -35,7 +35,7 @@ class BucketPruneSpec extends SparkSpec {
     }
   }
 
-  test("readStateKeyed returns exactly the full-scan result for the key") {
+  test("a keyed queryState returns exactly the full-scan result for the key") {
     val store = new TableStore(spark, tmpDir("graft-bucket-rt"), nBuckets = 8)
     import spark.implicits._
     val rows = (0 until 300).map(i => (s"addr-$i", i.toLong * 11, 0L, 0L, false, 0L,
@@ -45,11 +45,11 @@ class BucketPruneSpec extends SparkSpec {
     store.writeStateBuckets("account", "addr", df, (0 until 8).toSeq)
 
     rows.take(20).foreach { case (a, v, _, _, _, _, _, _, _) =>
-      val pruned = store.readStateKeyed("account", a)
+      val pruned = store.queryState("account", Some(a))
         .filter(col("addr") === a).collect()
       assert(pruned.length == 1 && pruned.head.getAs[Long]("microalgos") == v, s"key $a")
     }
     // and a key that does not exist
-    assert(store.readStateKeyed("account", "nope").filter(col("addr") === "nope").isEmpty)
+    assert(store.queryState("account", Some("nope")).filter(col("addr") === "nope").isEmpty)
   }
 }

@@ -322,13 +322,13 @@ class QueryApiSpec extends SparkSpec {
 
     // A store whose migration watermark predates the defined migrations
     // reports migration-required (reference: nextMigration < len(migrations)).
-    store.putMetastate(TableStore.MetaMigration -> """{"next":-1}""")
+    store.commit(sets = Seq(TableStore.MetaMigration -> """{"next":-1}"""))
     try {
       val stale = Api.health(store)
       assert(stale.data("migration-required") == "true")
       assert(stale.data("migration-status") == "migration required")
-    } finally store.putMetastate(TableStore.MetaMigration ->
-      s"""{"next":${Long.MaxValue}}""")
+    } finally store.commit(sets = Seq(TableStore.MetaMigration ->
+      s"""{"next":${Long.MaxValue}}"""))
   }
 
   test("nextRoundToLoad: max committed txn round + 1 from manifest stats, 0 when empty") {
@@ -350,7 +350,9 @@ class QueryApiSpec extends SparkSpec {
     val bs = (0L to 3L).map(r => block(r, Vector(pay(A, B, r + 1))))
     BlockIngest.applyBlocks(s2, spark.createDataset(bs.map(BlockCodec.blockToJson)))
     assert(s2.read("txn").count() == 4)
+    val before = s2.metaVersion
     Api.deleteTransactions(s2, keep = 2)
+    assert(s2.metaVersion == before + 1, "the prune and its watermark are one record")
     val rounds = s2.read("txn").select("round").collect().map(_.getLong(0)).sorted
     assert(rounds.toSeq == Seq(2, 3))
     assert(s2.metastate("pruned").contains("2"))
