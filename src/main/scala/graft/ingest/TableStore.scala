@@ -424,11 +424,13 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     * [[vacuum]] maintenance call (the Delta/Iceberg
     * logical-now-physical-later retention contract). */
   def compactSealed(table: String, activeRbkt: Long, maxFilesPerBucket: Int = 8): Int =
-    compactWhere(table, maxFilesPerBucket, _ < activeRbkt)
+    compactWhere(table, activeRbkt, maxFilesPerBucket)
 
-  private def compactWhere(table: String, maxFilesPerBucket: Int, eligible: Long => Boolean): Int = {
+  // Its own method so call-site phase attribution (as in perfbench's job
+  // listener) bills the rewrite and its index build to compaction.
+  private def compactWhere(table: String, activeRbkt: Long, maxFilesPerBucket: Int): Int = {
     val oversized = manifest(table).groupBy(rbktOf).filter { case (b, fs) =>
-      eligible(b) && fs.size > maxFilesPerBucket
+      b < activeRbkt && fs.size > maxFilesPerBucket
     }
     if (oversized.isEmpty) return 0
     val old = oversized.values.flatten.toSeq
@@ -621,9 +623,8 @@ final class TableStore(val spark: SparkSession, val root: String, val nBuckets: 
     requireWritable("commit")
     val indexed = staged.filter { case (t, files) => files.nonEmpty || retired.contains(t) }
     // One table (a maintenance op) builds in the calling thread, so its
-    // job keeps the caller's call site: call-site phase attribution (as in
-    // perfbench's job listener) bills a compaction's index build to
-    // `compactWhere`.
+    // job keeps the caller's call site (a compaction's index build stays
+    // billed to `compactWhere`).
     val indexes = indexed match {
       case Seq((t, files)) => Seq(buildFileIndex(t, files))
       case _ =>
